@@ -72,7 +72,7 @@ object Bench {
     val dumpsTimed = sys.env.get("SPARK_GRAFT_BENCH_TIME_DUMPS").contains("1")
     if (!dumpsTimed) System.setProperty("graft.aux.skip", "1")
     val loadStart = loadAvg
-    val spark = graft.tools.Local.session(cpus)
+    val spark = graft.tools.Local.session(cpus.toInt)
 
     // Warmup: one untimed pass per distinct machinery shape (agg, join,
     // udaf top-k, streaming microbatch) so one-time JVM/codegen/stream

@@ -20,7 +20,7 @@ object Verify {
       "graft.Verify must run WITHOUT -Dgraft.aux.skip=1 — the " +
         "dump-and-replay oracles need this run's own aux dumps")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = graft.tools.Local.session(cpus)
+    val spark = graft.tools.Local.session(cpus.toInt)
     new java.io.File(outDir).mkdirs()
     // dev-only subset filter (comma-separated names), the Bench idiom:
     // check a few queries against the oracle without dumping the suite

@@ -32,21 +32,17 @@ object Cli {
 
   /** B1/B2 session-from-config. Defaults `spark.master` to `local[*]`
     * when the config does not set one (the reference hard-requires it;
-    * a default is friendlier for local runs). */
+    * a default is friendlier for local runs). `GraftSession.setup` sizes
+    * a local master's shuffles to its cores unless `spark-prop` sets
+    * `spark.sql.shuffle.partitions`, and registers graft's SQL
+    * functions, so transform-sql can use graft_cosine / graft_simhash. */
   def session(conf: GraftConfig, defaultApp: String): SparkSession = {
     val sc = conf.at("spark")
     val props = sc.at("spark-prop").flat
-    var b = SparkSession.builder()
-      .appName(sc.getString("app").getOrElse(defaultApp))
-    if (!props.exists(_._1 == "spark.master")) b = b.master("local[*]")
-    if (props.toMap.get("spark.master").exists(_.startsWith("yarn")))
-      b = b.enableHiveSupport()
-    props.foreach { case (k, v) => b = b.config(k, v) }
-    val s = b.getOrCreate()
+    val s = graft.GraftSession.getOrCreate(
+      sc.getString("app").getOrElse(defaultApp), "local[*]", props,
+      hive = props.toMap.get("spark.master").exists(_.startsWith("yarn")))
     sc.at("hive-prop").flat.foreach { case (k, v) => s.conf.set(k, v) }
-    // graft's native SQL functions are available in every CLI session,
-    // so transform-sql can use graft_cosine / graft_simhash directly
-    graft.functions.GraftFunctions.register(s)
     s
   }
 

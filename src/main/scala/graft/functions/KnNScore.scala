@@ -169,7 +169,7 @@ object KnNRegistry {
     var i = 1
     while (i < lines.length) {
       val line = lines(i)
-      if (line.nonEmpty && line.charAt(0) == '#') {
+      if (NgramRegistry.isSectionMarker(line)) {
         val m = "^#(\\d+)grams$".r.findFirstMatchIn(line).getOrElse(
           throw new IllegalArgumentException(
             s"ngram LM $path: bad section marker '$line'"))

@@ -276,6 +276,12 @@ object NgramRegistry {
 
   private[graft] def invalidate(path: String): Unit = { cache.remove(path); () }
 
+  /** A `saveNgram` section marker (`#<k>grams`): starts with `#` and has
+    * no tab. Every gram line has a tab before its count, so a token that
+    * starts with `#` (`##`, `#2grams`) stays a gram line. */
+  private[functions] def isSectionMarker(line: String): Boolean =
+    line.nonEmpty && line.charAt(0) == '#' && line.indexOf('\t') < 0
+
   private def load(path: String): NgramLmTable = {
     val p = new org.apache.hadoop.fs.Path(path)
     val fs = p.getFileSystem(new org.apache.hadoop.conf.Configuration())
@@ -311,7 +317,7 @@ object NgramRegistry {
     var i = 1
     while (i < lines.length) {
       val line = lines(i)
-      if (line.nonEmpty && line.charAt(0) == '#') {
+      if (isSectionMarker(line)) {
         val m = "^#(\\d+)grams$".r.findFirstMatchIn(line).getOrElse(
           throw new IllegalArgumentException(s"ngram LM $path: bad section marker '$line'"))
         val k = m.group(1).toInt

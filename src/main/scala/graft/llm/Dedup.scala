@@ -59,15 +59,18 @@ object Dedup {
     filter(split(lower(trim(c)), "\\s+"), t => length(t) > 0)
 
   /** Word n-gram shingles as strings, e.g. n=3 → "a b c". Built with
-    * higher-order functions only — stays inside Catalyst. */
-  def shingles(c: Column, n: Int): Column = {
-    val toks = tokens(c)
-    array_distinct(
-      filter(
-        transform(sequence(lit(0), greatest(size(toks) - n, lit(0))),
-          i => concat_ws(" ", slice(toks, i + 1, lit(n)))),
-        s => length(s) > 0))
-  }
+    * higher-order functions only — stays inside Catalyst. The tokens are
+    * bound once through a one-element `transform`: a lambda body does
+    * not share subexpressions with its enclosing expression, so using
+    * `tokens(c)` inside the per-shingle lambda would re-split the whole
+    * text for every shingle (O(tokens²) per document). */
+  def shingles(c: Column, n: Int): Column =
+    element_at(transform(array(tokens(c)), toks =>
+      array_distinct(
+        filter(
+          transform(sequence(lit(0), greatest(size(toks) - n, lit(0))),
+            i => concat_ws(" ", slice(toks, i + 1, lit(n)))),
+          s => length(s) > 0))), 1)
 
   // ---------------------------------------------------------- MinHash-LSH
 

@@ -19,7 +19,7 @@ object BpeDistProbe {
     val numWords = args.headOption.map(_.toInt).getOrElse(1 << 20)
     val numMerges = if (args.length > 1) args(1).toInt else 32
     val batchK = if (args.length > 2) args(2).toInt else 8
-    val spark = Local.session(sys.env.getOrElse("SPARK_GRAFT_CPUS", "8"))
+    val spark = Local.session()
     import spark.implicits._
     import org.apache.spark.sql.functions._
 

@@ -10,8 +10,7 @@ object Explain {
   def main(args: Array[String]): Unit = {
     val name = args(0)
     val sfDir = if (args.length > 1) args(1) else "/root/testdata/sf0.1"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = Local.session(cpus, logLevel = "ERROR")
+    val spark = Local.session(logLevel = "ERROR")
     def run(): Double = {
       val t0 = System.nanoTime()
       graft.SparkEntry.queries(name)(spark, sfDir)

@@ -8,8 +8,7 @@ import org.apache.spark.sql.functions._
 object FnBench {
   def main(args: Array[String]): Unit = {
     val sfDir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.1"
-    val spark = Local.session(sys.env.getOrElse("SPARK_GRAFT_CPUS", "8"), logLevel = "ERROR")
-    graft.functions.GraftFunctions.register(spark)
+    val spark = Local.session(logLevel = "ERROR")
 
     def time(label: String)(df: DataFrame): Unit = {
       df.write.format("noop").mode("overwrite").save() // warm

@@ -16,7 +16,7 @@ object HeapProbe {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val spark = Local.session(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
+    val spark = Local.session()
     val qs = if (args.nonEmpty) args.toSeq else Seq(
       "q38_transitive_dedup", "q39_vector_near_dup", "q73_semdedup",
       "q22_curation", "q62_incremental_vector_dedup")

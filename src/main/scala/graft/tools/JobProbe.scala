@@ -14,7 +14,7 @@ object JobProbe {
     val names = args(0).split(",").map(_.trim)
     val sfDir = if (args.length > 1) args(1) else "/root/testdata/sf0.1"
     System.setProperty("graft.aux.skip", "1")
-    val spark = Local.session(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"), logLevel = "ERROR")
+    val spark = Local.session(logLevel = "ERROR")
     val jobs = new java.util.concurrent.ConcurrentHashMap[Int, (Long, Int, String)]()
     val done = new java.util.concurrent.ConcurrentLinkedQueue[(Int, Long, Int, String)]()
     spark.sparkContext.addSparkListener(new SparkListener {

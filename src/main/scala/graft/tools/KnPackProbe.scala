@@ -10,7 +10,7 @@ import graft.llm.LangModel
   * each). Run: `sbt "runMain graft.tools.KnPackProbe"`. */
 object KnPackProbe {
   def main(args: Array[String]): Unit = {
-    val spark = Local.session("8")
+    val spark = Local.session()
     val docs = spark.read.parquet("/root/testdata/sf0.01/documents.parquet")
       .select(col("doc_id"), col("text"))
     val lm = LangModel.trainKneserNeyN(

@@ -11,7 +11,7 @@ object LmNProbe {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val order = args.lift(1).map(_.toInt).getOrElse(4)
     val minCount = args.lift(2).map(_.toLong).getOrElse(2L)
-    val spark = Local.session("8")
+    val spark = Local.session()
     val docs = spark.read.parquet(s"$sfDir/documents.parquet")
       .select(col("doc_id"), col("text"))
     val nTokens = docs.select(sum(graft.llm.TextAnalysis.wsTokenCount(col("text"))))

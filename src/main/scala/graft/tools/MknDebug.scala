@@ -5,7 +5,7 @@ import graft.llm.LangModel
 
 object MknDebug {
   def main(args: Array[String]): Unit = {
-    val spark = Local.session("8")
+    val spark = Local.session()
     import spark.implicits._
     val all = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
       .select(col("doc_id"), col("text"))

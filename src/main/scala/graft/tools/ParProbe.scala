@@ -8,7 +8,7 @@ import org.apache.spark.sql.functions._
 object ParProbe {
   def main(args: Array[String]): Unit = {
     val sfDir = if (args.length > 0) args(0) else "/root/testdata/sf0.1"
-    val spark = Local.session(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"), logLevel = "ERROR")
+    val spark = Local.session(logLevel = "ERROR")
     def time(label: String)(f: => Unit): Unit = {
       f // warm
       val t0 = System.nanoTime(); f

@@ -49,7 +49,7 @@ object PerfProbe {
     */
   private def probe1(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val spark = Local.session(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
+    val spark = Local.session()
     def time(label: String)(body: => Unit): Unit = {
       val t0 = System.nanoTime()
       body
@@ -132,7 +132,7 @@ object PerfProbe {
     * variants. Manual tool, never part of the gate. */
   private def probe2(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val spark = Local.session(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
+    val spark = Local.session()
     def time(label: String)(body: => Unit): Unit = {
       val t0 = System.nanoTime()
       body
@@ -226,7 +226,7 @@ object PerfProbe {
     * tagged-union CC and the trimmed corpus? Manual tool, not in the gate. */
   private def probe3(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val spark = Local.session(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
+    val spark = Local.session()
     def time(label: String)(body: => Unit): Unit = {
       val t0 = System.nanoTime()
       body
@@ -277,7 +277,7 @@ object PerfProbe {
     * individually (warm JVM, warm state). */
   private def probe4(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val spark = Local.session(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
+    val spark = Local.session()
     def time(label: String)(body: => Unit): Unit = {
       val t0 = System.nanoTime()
       body
@@ -373,7 +373,7 @@ object PerfProbe {
     * task time, the cost is DAG scheduling/planning, not execution. */
   private def probe5(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val spark = Local.session(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
+    val spark = Local.session()
     def noop(df: org.apache.spark.sql.DataFrame): Unit =
       df.write.format("noop").mode("overwrite").save()
     Seq("q1_pricing_summary", "q6_join_agg", "q15_knn_brute").foreach { q =>
@@ -453,7 +453,7 @@ object PerfProbe {
     * (PerfProbe5) cannot see. */
   private def probe6(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val spark = Local.session(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
+    val spark = Local.session()
     def noop(df: org.apache.spark.sql.DataFrame): Unit =
       df.write.format("noop").mode("overwrite").save()
     Seq("q1_pricing_summary", "q6_join_agg", "q15_knn_brute").foreach { q =>
@@ -492,7 +492,7 @@ object PerfProbe {
     * candidate join, Jaccard verify, or the survivor cross-tab? */
   private def probe7(args: Array[String]): Unit = {
     val dir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val s = Local.session("32")
+    val s = Local.session()
     import graft.llm.Dedup
     def timed[A](label: String)(f: => A): A = {
       val t0 = System.nanoTime(); val r = f
@@ -543,7 +543,7 @@ object PerfProbe {
   private def probe8(args: Array[String]): Unit = {
     val corpusN = sys.env.getOrElse("SPARK_GRAFT_PROBE8_CORPUS", "5000000").toLong
     val batchN = sys.env.getOrElse("SPARK_GRAFT_PROBE8_BATCH", "50000").toLong
-    val s = Local.session("32")
+    val s = Local.session()
     import graft.llm.Dedup
     def timed[A](label: String)(f: => A): A = {
       val t0 = System.nanoTime(); val r = f
@@ -586,8 +586,7 @@ object PerfProbe {
     * DESIGN.md). Usage: runMain graft.tools.PerfProbe9 [sfDir] */
   private def probe9(args: Array[String]): Unit = {
     val sfDir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.1"
-    val spark = Local.session(sys.env.getOrElse("SPARK_GRAFT_CPUS", "8"),
-      logLevel = "ERROR")
+    val spark = Local.session(logLevel = "ERROR")
     import graft.llm.BpeTrainer
     val docs = spark.read.parquet(s"$sfDir/documents.parquet")
       .select(col("doc_id"), col("text")).cache()
@@ -689,7 +688,7 @@ object PerfProbe {
     * (hashing is embarrassingly parallel scan work; the join is the
     * part whose scale behavior needs evidence). */
   private def probe12(args: Array[String]): Unit = {
-    val spark = Local.session(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
+    val spark = Local.session()
     import spark.implicits._
     val n = args.headOption.map(_.toInt).getOrElse(1 << 20)
     def mix(x: Long): Long = {
@@ -723,7 +722,7 @@ object PerfProbe {
     * back at the planted delta — the q133/q134 shape at 1000× the gate
     * corpus. `args(0)` overrides the clip count. */
   private def probe13(args: Array[String]): Unit = {
-    val spark = Local.session(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
+    val spark = Local.session()
     import spark.implicits._
     val clips = args.headOption.map(_.toInt).getOrElse(200000)
     val k = 5
@@ -764,7 +763,7 @@ object PerfProbe {
     * wall times and the survivor-pool size the exact window actually
     * sorts (vs the full corpus for the plain form). */
   private def probe14(args: Array[String]): Unit = {
-    val spark = Local.session(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
+    val spark = Local.session()
     import spark.implicits._
     import graft.operators.Ops
     val n = args.headOption.map(_.toInt).getOrElse(5000000)
@@ -807,7 +806,7 @@ object PerfProbe {
     * the full corpus through the codegen'd `graft_unigram_encode` scan,
     * plus the in-heap/distributed agreement on the same corpus. */
   private def probe15(args: Array[String]): Unit = {
-    val spark = Local.session(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
+    val spark = Local.session()
     import spark.implicits._
     import graft.llm.UnigramTrainer
     val nDocs = args.headOption.map(_.toInt).getOrElse(1000000)
@@ -859,7 +858,7 @@ object PerfProbe {
     * applied in one pass. Reports wall time for 200 merges and the
     * trained vocab's greedy-encode throughput. */
   private def probe16(args: Array[String]): Unit = {
-    val spark = Local.session(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
+    val spark = Local.session()
     import spark.implicits._
     import graft.llm.WordPieceTrainer
     val nDocs = args.headOption.map(_.toInt).getOrElse(1000000)
@@ -912,7 +911,7 @@ object PerfProbe {
     * term as the corpus accretes, never with a corpus-vs-corpus
     * join. Output quoted in DESIGN.md. */
   private def probe17(args: Array[String]): Unit = {
-    val spark = Local.session(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
+    val spark = Local.session()
     val m = args.headOption.map(_.toInt).getOrElse(200000)
     val k = args.drop(1).headOption.map(_.toInt).getOrElse(5)
     val root = java.nio.file.Files.createTempDirectory("probe17")
@@ -964,7 +963,7 @@ object PerfProbe {
     * synthetic texts; reports docs/s for the transform at rate 0.5 vs
     * the bare md5-predicate filter on the same frame (the floor). */
   private def probe18(args: Array[String]): Unit = {
-    val spark = Local.session(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
+    val spark = Local.session()
     val m = args.headOption.map(_.toLong).getOrElse(5000000L)
     val docs = spark.range(m).select(col("id").as("doc_id"),
       concat_ws(" ", (0 until 8).map(i =>
@@ -1014,7 +1013,7 @@ object PerfProbe {
     * beyond ~10^8 images widen the fingerprint (256-bit pHash family),
     * don't narrow the bands. */
   private def probe19(args: Array[String]): Unit = {
-    val spark = Local.session(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
+    val spark = Local.session()
     import spark.implicits._
     val n = args.headOption.map(_.toLong).getOrElse(5000000L)
     val twins = args.drop(1).headOption.map(_.toLong).getOrElse(1000L)
@@ -1112,7 +1111,7 @@ object PerfProbe {
     * wide corpus with the guard riding PERSISTED mergeable
     * wideBucketCounts. */
   private def probe20(args: Array[String]): Unit = {
-    val spark = Local.session(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
+    val spark = Local.session()
     import spark.implicits._
     val n = args.headOption.map(_.toLong).getOrElse(3000000L)
     val twins = args.drop(1).headOption.map(_.toLong).getOrElse(1000L)
@@ -1205,7 +1204,7 @@ object PerfProbe {
     * of PNG arrivals against an n-sig state at the dct lineage's
     * geometry (radius 7, 4 bands, probe 1). */
   private def probe21(args: Array[String]): Unit = {
-    val spark = Local.session(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
+    val spark = Local.session()
     import spark.implicits._
     import graft.llm.Multimodal
     val n = args.headOption.map(_.toLong).getOrElse(1000000L)

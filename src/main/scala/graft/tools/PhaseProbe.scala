@@ -9,7 +9,7 @@ object PhaseProbe {
     val names = args(0).split(",").map(_.trim)
     val sfDir = if (args.length > 1) args(1) else "/root/testdata/sf0.1"
     System.setProperty("graft.aux.skip", "1")
-    val spark = Local.session(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"), logLevel = "ERROR")
+    val spark = Local.session(logLevel = "ERROR")
     def ms[T](f: => T): (T, Double) = {
       val t0 = System.nanoTime(); val r = f; (r, (System.nanoTime() - t0) / 1e6)
     }

@@ -15,10 +15,9 @@ object PlanDump {
     val names = args(2).split(",").map(_.trim).filter(_.nonEmpty)
     val sfDir = if (args.length > 3) args(3) else "/root/testdata/sf0.1"
     outDir.mkdirs()
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     // production form: plans must reflect what Bench times
     System.setProperty("graft.aux.skip", "1")
-    val spark = Local.session(cpus, logLevel = "ERROR")
+    val spark = Local.session(logLevel = "ERROR")
     names.foreach { name =>
       try {
         val df = graft.SparkEntry.queries(name)(spark, sfDir)

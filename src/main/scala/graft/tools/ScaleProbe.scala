@@ -16,7 +16,7 @@ object ScaleProbe {
   def main(args: Array[String]): Unit = {
     val nRows = if (args.length > 0) args(0).toLong else 5000000L
     val nVecs = if (args.length > 1) args(1).toLong else 200000L
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = graft.GraftSession.localCores
     val spark = Local.session(cpus, logLevel = "ERROR")
     import spark.implicits._
 

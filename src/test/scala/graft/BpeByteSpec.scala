@@ -185,7 +185,6 @@ class BpeByteSpec extends SparkTestBase {
       .map(r => r.getLong(0) -> (if (r.isNullAt(1)) null else r.getString(1))).toMap
     assert(rows == Map(1L -> "alpha beta", 2L -> null))
 
-    GraftFunctions.register(spark)
     df.createOrReplaceTempView("bpe_byte_docs")
     val viaSql = spark.sql(
       s"""SELECT id,
@@ -234,7 +233,6 @@ class BpeByteSpec extends SparkTestBase {
     // null stays null; SQL name registered
     assert(Seq((1, null: String)).toDF("i", "s")
       .select(GraftFunctions.byteUnicodeMap(col("s"))).head().isNullAt(0))
-    GraftFunctions.register(spark)
     tricky.toDF("s").createOrReplaceTempView("byteuni_docs")
     val viaSql = spark.sql(
       "SELECT graft_byte_unicode(s) FROM byteuni_docs")
@@ -296,7 +294,6 @@ class BpeByteSpec extends SparkTestBase {
         .as(Seq("cid", "c")))
     assert(withOverlap.count() >= chunks.filter(col("id") === 0).count())
     // SQL surface
-    GraftFunctions.register(spark)
     docs.createOrReplaceTempView("bpe_byte_chunk_docs")
     val viaSql = spark.sql(
       s"SELECT size(graft_bpe_byte_chunks(text, '$mergesPath', 8, 0)) FROM bpe_byte_chunk_docs WHERE id = 0")
@@ -367,7 +364,6 @@ class BpeByteSpec extends SparkTestBase {
     // a pure-special chunk reports cost 1
     assert(rows.filter(_.getString(2) == special).forall(_.getInt(3) == 1))
     // SQL surface: 5th comma-separated specials argument
-    GraftFunctions.register(spark)
     docs.createOrReplaceTempView("bpe_byte_sp_docs")
     val viaSql = spark.sql(
       s"SELECT graft_bpe_byte_chunks(text, '$mergesPath', 1, 0, '$special') " +

@@ -76,7 +76,6 @@ class BpeSpec extends SparkTestBase {
       graft.llm.TextAnalysis.bpeTokenCount(col("text"), classicPath).as("n"))
     val rows = viaColumn.collect().map(r => r.getLong(0) -> (if (r.isNullAt(1)) -1 else r.getInt(1))).toMap
     assert(rows == Map(1L -> 7, 2L -> -1))
-    GraftFunctions.register(spark)
     df.createOrReplaceTempView("bpe_docs")
     val viaSql = spark.sql(
       s"SELECT id, graft_bpe_count(text, '$classicPath') AS n FROM bpe_docs WHERE text IS NOT NULL")
@@ -106,7 +105,6 @@ class BpeSpec extends SparkTestBase {
     assert(r1.getSeq[String](1) == Seq("low", "low", "er", "n", "e", "w", "er"))
     assert(r1.getSeq[String](1).size == r1.getInt(2)) // size(segments) == count
     assert(rows.find(_.getLong(0) == 2L).get.isNullAt(1))
-    GraftFunctions.register(spark)
     df.createOrReplaceTempView("bpe_seg_docs")
     val viaSql = spark.sql(
       s"SELECT graft_bpe_segments(text, '$classicPath') FROM bpe_seg_docs WHERE id = 1")
@@ -136,7 +134,6 @@ class BpeSpec extends SparkTestBase {
     assert(segs2 == Seq("z", "z", "z", "low"))
     assert(ids2 == Seq(0, 0, 0, vocab.indexOf("low")))
     // SQL surface agrees with the Column surface
-    GraftFunctions.register(spark)
     df.createOrReplaceTempView("bpe_enc_t")
     val sqlIds = spark.sql(
       s"SELECT graft_bpe_encode(text, '$merges', '$vocabFile') FROM bpe_enc_t WHERE id = 1")
@@ -239,7 +236,6 @@ class BpeSpec extends SparkTestBase {
       assert(got == s, s"round trip failed on ${s.getBytes("UTF-8").toSeq}")
     }
     // SQL surface agrees
-    GraftFunctions.register(spark)
     df.createOrReplaceTempView("bpe_fb_t")
     val viaSql = spark.sql(
       s"""SELECT graft_bpe_decode(
@@ -292,7 +288,6 @@ class BpeSpec extends SparkTestBase {
     // ☃ (3 bytes) + ü (2 bytes) = 5 ids from 2 segments → +3
     assert(id2 == seg2 + 3, s"byte fallback gap: ids=$id2 segments=$seg2")
     // SQL surface agrees
-    GraftFunctions.register(spark)
     df.createOrReplaceTempView("bpe_idc_t")
     val viaSql = spark.sql(
       s"SELECT graft_bpe_id_count(text, '$mPath', '$vPath') FROM bpe_idc_t WHERE id = 2")
@@ -390,7 +385,6 @@ class BpeSpec extends SparkTestBase {
   }
 
   test("graft_bpe_chunks SQL surface agrees with the Column form") {
-    GraftFunctions.register(spark)
     Seq((1L, "low lower newer low low")).toDF("doc_id", "text")
       .createOrReplaceTempView("bpe_chunk_docs")
     val viaSql = spark.sql(

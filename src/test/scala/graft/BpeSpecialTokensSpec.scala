@@ -145,7 +145,6 @@ class BpeSpecialTokensSpec extends SparkTestBase {
 
   test("SQL 4-arg forms accept a comma-separated specials list") {
     val (m, v, eotId) = trainSeg(corpus, 24, Seq(Eot, Fim))
-    GraftFunctions.register(spark)
     Seq(s"x $Eot y $Fim").toDF("t").createOrReplaceTempView("sp_docs")
     val ids = spark.sql(
       s"SELECT graft_bpe_encode_lossless(t, '$m', '$v', '$Eot,$Fim') AS ids FROM sp_docs")

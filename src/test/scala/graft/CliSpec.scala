@@ -48,6 +48,61 @@ class CliSpec extends CliSpecBase {
     assert(s.conf.get("spark.sql.shuffle.partitions") == "4")
   }
 
+  test("a fresh local[N] CLI session shuffles N ways unless spark-prop sets " +
+      "the width") {
+    // a fresh session needs its own JVM: this one already runs the
+    // suites' local[4] session
+    val dir = tmp()
+    val plain = write(dir.resolve("plain.conf"),
+      """spark.spark-prop { spark.master = "local[3]" }""")
+    val explicitWidth = write(dir.resolve("explicit.conf"),
+      """spark.spark-prop {
+        |  spark.master = "local[3]"
+        |  spark.sql.shuffle.partitions = 5
+        |}""".stripMargin)
+    import scala.jdk.CollectionConverters._
+    val jvmArgs = java.lang.management.ManagementFactory.getRuntimeMXBean
+      .getInputArguments.asScala.toSeq
+    val addOpens = jvmArgs.zipWithIndex.flatMap {
+      case (a, _) if a.startsWith("--add-opens=") => Seq(a)
+      case ("--add-opens", i) => Seq("--add-opens", jvmArgs(i + 1))
+      case _ => Nil
+    }
+    val cmd = Seq(s"${System.getProperty("java.home")}/bin/java", "-Xmx768m",
+      "-Dspark.ui.enabled=false", s"-Djava.io.tmpdir=${dir.toAbsolutePath}") ++
+      addOpens ++ Seq("-cp", System.getProperty("java.class.path"),
+        "graft.ShuffleWidthMain", plain, explicitWidth)
+    val out = new StringBuilder
+    val rc = scala.sys.process.Process(cmd).!(scala.sys.process.ProcessLogger(
+      l => out ++= l + "\n", l => out ++= l + "\n"))
+    val widths = out.toString.split("\n").collect {
+      case l if l.startsWith("width ") => l.stripPrefix("width ")
+    }.toSeq
+    assert(rc == 0 && widths == Seq("3", "5"), s"rc=$rc\n$out")
+  }
+
+  test("a running session's explicit shuffle width is left alone") {
+    val key = GraftSession.ShufflePartitions
+    assert(spark.conf.get(key) == "4") // the suites' session, set by setup
+    spark.conf.set(key, "7")
+    try {
+      val s = Cli.session(GraftConfig.parse("spark { app = graft-test }"), "fallback")
+      assert(s eq spark)
+      assert(s.conf.get(key) == "7")
+    } finally spark.conf.set(key, "4")
+  }
+
+  test("the shuffle-width decision leaves cluster masters and explicit " +
+      "widths alone") {
+    import GraftSession.shufflePartitions
+    assert(shufflePartitions("local[3]", explicit = false, parallelism = 3).contains(3))
+    assert(shufflePartitions("local[*]", explicit = false, parallelism = 4).contains(4))
+    assert(shufflePartitions("local", explicit = false, parallelism = 1).contains(1))
+    assert(shufflePartitions("local[3]", explicit = true, parallelism = 3).isEmpty)
+    Seq("yarn", "spark://host:7077", "k8s://https://host:6443", "mesos://host:5050")
+      .foreach(m => assert(shufflePartitions(m, explicit = false, parallelism = 64).isEmpty, m))
+  }
+
   test("mover copies source parquet to target directory (E1)") {
     val out = tmp().resolve("moved").toString
     val f = write(tmp().resolve("mover.conf"),
@@ -834,5 +889,15 @@ class CliSpec extends CliSpecBase {
     assert(json.contains(""""curate":{"sec":""") && json.contains(""""rows":"""))
     // run order is preserved: the gate precedes the write
     assert(json.indexOf("domain-gate") < json.indexOf("target-write"))
+  }
+}
+
+/** Child-JVM probe for CliSpec: builds a CLI session from each HOCON
+  * file in turn, prints its shuffle width, and stops it. */
+object ShuffleWidthMain {
+  def main(args: Array[String]): Unit = args.foreach { f =>
+    val s = Cli.session(Cli.parseConf(Array("--conf", f)), "shuffle-width")
+    println(s"width ${s.conf.get(GraftSession.ShufflePartitions)}")
+    s.stop()
   }
 }

@@ -43,6 +43,35 @@ class DedupSpec extends SparkTestBase {
     assert(short.toSet == Set("a b")) // shorter than n → one truncated shingle
   }
 
+  test("shingles binds its tokens once: the same arrays as the per-shingle " +
+      "re-tokenizing formula, on edge cases and generated texts") {
+    import org.scalacheck.Gen
+    import org.scalacheck.rng.Seed
+    // the formula before the tokens were bound once
+    def reTokenizing(c: org.apache.spark.sql.Column, n: Int) = {
+      val toks = Dedup.tokens(c)
+      array_distinct(
+        filter(
+          transform(sequence(lit(0), greatest(size(toks) - n, lit(0))),
+            i => concat_ws(" ", slice(toks, i + 1, lit(n)))),
+          s => length(s) > 0))
+    }
+    val edges = Seq("", "   ", "\t\n ", "a", "a b", "a a a a a a", "x y x y x y",
+      "one\ttwo\nthree\r\nfour", "   leading spaces here", "Mixed CASE mixed Case",
+      "trailing  ")
+    val word = Gen.oneOf("a", "B", "the", "The", "x1", "é", "##", "")
+    val sep = Gen.oneOf(" ", "  ", "\t", "\n", " \t ")
+    val text = Gen.chooseNum(0, 12).flatMap(k => Gen.listOfN(k, Gen.zip(word, sep)))
+      .map(_.map { case (w, s) => w + s }.mkString)
+    val generated = (0 until 200).flatMap(i => text(Gen.Parameters.default, Seed(i.toLong)))
+    val df = (edges ++ generated).map(Option(_)).:+(None).toDF("text")
+    (1 to 4).foreach { n =>
+      val mism = df.filter(!(Dedup.shingles(col("text"), n) <=>
+        reTokenizing(col("text"), n))).collect()
+      assert(mism.isEmpty, s"n=$n differs on ${mism.map(_.get(0)).mkString("|")}")
+    }
+  }
+
   test("minHashNearDups finds planted exact+near dups, not unrelated docs (tier 2)") {
     val pairs = Dedup.minHashNearDups(withDups, "doc_id", "text",
       maxJaccardDistance = 0.5, numHashTables = 7)

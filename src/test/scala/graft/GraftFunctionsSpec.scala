@@ -126,7 +126,6 @@ class GraftFunctionsSpec extends SparkTestBase {
 
   test("sketch aggregates run via SQL (analyzer wraps the bare AggregateFunction)") {
     import spark.implicits._
-    GraftFunctions.register(spark)
     Seq("a", "b", "a", 1.0.toString).toDF("s").createOrReplaceTempView("__sk_t")
     val freq = spark.sql("SELECT graft_freq_sketch(s, 8) FROM __sk_t")
       .head().getSeq[org.apache.spark.sql.Row](0)
@@ -161,7 +160,6 @@ class GraftFunctionsSpec extends SparkTestBase {
       assert(got(seed - 4) == ((wantI, wantA)))
     }
     // SQL registration path
-    GraftFunctions.register(spark)
     rows.createOrReplaceTempView("mh_assets")
     val viaSql = spark.sql(
       "SELECT graft_media_hash(img, 'image') AS ih FROM mh_assets WHERE id = 1")
@@ -213,7 +211,6 @@ class GraftFunctionsSpec extends SparkTestBase {
     assert(media.select(GraftFunctions.mediaVideoHash(col("content"), 9))
       .head().getSeq[Long](0).length == 4)
     // SQL registration path
-    GraftFunctions.register(spark)
     media.createOrReplaceTempView("mvh_assets")
     assert(spark.sql(
       "SELECT graft_media_video_hash(content, 2) FROM mvh_assets WHERE asset_id = 10")
@@ -252,7 +249,6 @@ class GraftFunctionsSpec extends SparkTestBase {
       GraftFunctions.pretokenCount(col("t")).as("n"))
     assert(undecl.filter(col("c.chunk_tokens") =!= col("n")).count() == 0)
     // SQL registration + degenerate input
-    GraftFunctions.register(spark)
     assert(spark.sql("SELECT graft_pretoken_count('')").head().getInt(0) == 0)
     assert(spark.sql("SELECT graft_pretoken_count('a b', 'a')").head().getInt(0)
       == spark.sql("SELECT graft_pretoken_count('a b')").head().getInt(0))
@@ -278,7 +274,6 @@ class GraftFunctionsSpec extends SparkTestBase {
     assert(mixed.select(GraftFunctions.hammingLongs(col("a"), col("b")))
       .head().getInt(0) == Int.MaxValue)
     // SQL registration path
-    GraftFunctions.register(spark)
     assert(spark.sql(
       "SELECT graft_hamming(array(0L, -1L), array(0L, 0L))").head().getInt(0) == 64)
     // type error caught at analysis

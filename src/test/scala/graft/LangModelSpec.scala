@@ -95,7 +95,6 @@ class LangModelSpec extends SparkTestBase {
     val lm = LangModel.trainUnigram(ref, "text")
     val path = tmpLm("sql.lm")
     LangModel.save(lm, path)
-    GraftFunctions.register(spark)
     val v = spark.sql(s"SELECT graft_lm_logprob('a b', '$path') AS lp").head().getDouble(0)
     assert(v == (StrictMath.log10(3.0 / 6.0) + StrictMath.log10(2.0 / 6.0)) / 2)
     val err = intercept[Exception] {
@@ -297,7 +296,6 @@ class LangModelSpec extends SparkTestBase {
     assert(native == composable,
       "native trigram scoring must match the composable form at round(6)")
     // SQL surface
-    GraftFunctions.register(spark)
     docs.limit(3).createOrReplaceTempView("lm3_docs")
     val viaSql = spark.sql(
       s"SELECT graft_lm3_logprob(text, '$path') FROM lm3_docs").collect()
@@ -386,7 +384,6 @@ class LangModelSpec extends SparkTestBase {
     assert(native == composable,
       "native ngram scoring must match the composable form at round(5)")
     // SQL surface
-    GraftFunctions.register(spark)
     docs.limit(3).createOrReplaceTempView("lmn_docs")
     val viaSql = spark.sql(
       s"SELECT graft_lmn_logprob(text, '$path') FROM lmn_docs").collect()
@@ -729,6 +726,36 @@ class LangModelSpec extends SparkTestBase {
       spark.range(1).select(GraftFunctions.knNLogProb(lit("a b c d"), triPath)).head()
     }
     assert(err.getMessage != null)
+  }
+
+  test("saveNgram artifacts with '#'-leading tokens load: a line is a section " +
+      "marker only without a tab; native scores match the composable forms") {
+    val ref = Seq(
+      "## intro the cat sat on the mat",
+      "the cat sat on #2grams the mat ##",
+      "#2grams ## the dog sat on the log",
+      "## ## the cat and the dog #3grams").toDF("text")
+    val docs = Seq((1L, "## the cat sat on #2grams"), (2L, "the dog ## sat"),
+      (3L, "#2grams ## ##"), (4L, "unseen # words #3grams the mat")).toDF("doc_id", "text")
+    docs.createOrReplaceTempView("hash_token_docs")
+    def scores(df: org.apache.spark.sql.DataFrame, digits: Int): Map[Long, Double] =
+      df.collect().map(r => r.getLong(0) ->
+        BigDecimal(r.getDouble(1)).setScale(digits, BigDecimal.RoundingMode.HALF_UP)
+          .toDouble).toMap
+    val kn = LangModel.trainKneserNeyN(ref, "text", 3)
+    val knPath = tmpLm("hash_tokens_kn.lm3")
+    LangModel.saveNgram(kn.ngram, knPath)
+    assert(scores(spark.sql(
+      s"SELECT doc_id, graft_knn_logprob(text, '$knPath') FROM hash_token_docs"), 6) ==
+      scores(LangModel.logProbPerDocKneserNeyN(docs, kn, "doc_id", "text"), 6))
+    // the stupid-backoff table stores float32 log-probabilities, so its
+    // parity with the composable form holds at round(5), as above
+    val lm = LangModel.trainNgram(ref, "text", order = 3)
+    val lmPath = tmpLm("hash_tokens_lmn.lm3")
+    LangModel.saveNgram(lm, lmPath)
+    assert(scores(spark.sql(
+      s"SELECT doc_id, graft_lmn_logprob(text, '$lmPath') FROM hash_token_docs"), 5) ==
+      scores(LangModel.logProbPerDocNgram(docs, lm, "doc_id", "text"), 5))
   }
 
   test("packed KN-n registry: flat fingerprint/float32 tables agree with " +

@@ -68,7 +68,6 @@ class MarkdownSpec extends SparkTestBase {
   }
 
   test("Column + SQL surfaces; null passes through") {
-    GraftFunctions.register(spark)
     val df = Seq((1L, "# T\n**b** [l](u)"), (2L, null.asInstanceOf[String]))
       .toDF("id", "md")
     df.createOrReplaceTempView("md_docs")

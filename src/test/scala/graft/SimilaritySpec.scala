@@ -219,7 +219,6 @@ class SimilaritySpec extends SparkTestBase {
     val plan = f.queryExecution.executedPlan.toString
     assert(plan.contains("*(1)"), s"expected WholeStageCodegen:\n$plan")
     // SQL form == Column form
-    graft.functions.GraftFunctions.register(spark)
     emb.limit(8).createOrReplaceTempView("__srp_t")
     val viaSql = spark.sql("SELECT graft_srp(embedding) AS s FROM __srp_t")
       .collect().map(_.getLong(0)).toSeq

@@ -10,16 +10,14 @@ trait SparkTestBase extends AnyFunSuite {
 }
 
 object SparkTestBase {
+  /** `local[4]` through the shared `GraftSession` setup, which sizes
+    * shuffles to the 4 cores and registers graft's SQL functions. */
   lazy val session: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
+    val s = GraftSession.getOrCreate("graft-test", "local[4]", Seq(
+      "spark.sql.session.timeZone" -> "UTC",
+      "spark.ui.enabled" -> "false"))
       // no nanosAsLong — match Local.session: a ns-precision source
       // must fail loudly, not read as misinterpreted raw longs
-      .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     s
   }

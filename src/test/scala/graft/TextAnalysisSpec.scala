@@ -102,7 +102,6 @@ class TextAnalysisSpec extends SparkTestBase {
       TextAnalysis.docFingerprintHof(col("text")).as("hof"))
     assert(cmp.filter(col("native") =!= col("hof")).count() == 0)
     // and the SQL registration path resolves to the same expression
-    graft.functions.GraftFunctions.register(spark)
     val viaSql = docs.limit(5).select(
       call_function("graft_fingerprint", col("text"), lit(8), lit(4)).as("f"),
       TextAnalysis.docFingerprint(col("text")).as("g"))

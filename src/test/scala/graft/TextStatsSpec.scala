@@ -124,7 +124,6 @@ class TextStatsSpec extends SparkTestBase {
       .collect().map(r => r.getLong(0) -> (if (r.isNullAt(1)) -1 else r.getInt(1))).toMap
     // 😀 is 2 UTF-16 units but ONE codepoint — the case length() gets wrong
     assert(got == Map(1L -> 3, 2L -> 5, 3L -> 1, 4L -> 2, 5L -> 0, 6L -> -1))
-    GraftFunctions.register(spark)
     df.createOrReplaceTempView("cp_t")
     assert(spark.sql("SELECT graft_cp_count(t) FROM cp_t WHERE id = 4")
       .head().getInt(0) == 2)

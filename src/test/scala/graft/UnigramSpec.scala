@@ -68,7 +68,6 @@ class UnigramSpec extends SparkTestBase {
   }
 
   test("Column + SQL surfaces: segments/encode/decode/count agree; codegen plan") {
-    GraftFunctions.register(spark)
     val df = Seq((1L, "ab abc zq"), (2L, "ba ☃")).toDF("id", "text")
     df.createOrReplaceTempView("ug_docs")
     val r = spark.sql(
@@ -90,7 +89,6 @@ class UnigramSpec extends SparkTestBase {
 
   test("graft_unigram_chunks: greedy fill under the id budget, tiling at overlap 0, " +
       "chunk_bpe_tokens == graft_unigram_count, byte-fallback costs counted") {
-    GraftFunctions.register(spark)
     // counts under tinyPath: "ab"=1, "abc"=1, "c"=1, "zq"=2 (two byte ids)
     val df = Seq((1L, "ab ab ab abc c"), (2L, "zq ab")).toDF("id", "text")
     df.createOrReplaceTempView("ug_chunk_docs")

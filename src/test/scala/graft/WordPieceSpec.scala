@@ -63,7 +63,6 @@ class WordPieceSpec extends SparkTestBase {
   }
 
   test("SQL + Column surfaces: segments (2- and 3-arg), encode, count, roundtrip") {
-    GraftFunctions.register(spark)
     val p = vocabFile("[UNK]", "un", "##aff", "##able")
     val df = Seq((1L, "unaffable qq")).toDF("id", "text")
     df.createOrReplaceTempView("wp_docs")
