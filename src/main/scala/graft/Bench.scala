@@ -59,7 +59,7 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
     // PRODUCTION-FORM timings (round-13 verdict item 3): the ~25
     // dump-and-replay gates pay a `coalesce(1)` oracle-dump write that
     // exists only for graft.Verify's DuckDB replay — timing it would
@@ -72,7 +72,7 @@ object Bench {
     val dumpsTimed = sys.env.get("SPARK_GRAFT_BENCH_TIME_DUMPS").contains("1")
     if (!dumpsTimed) System.setProperty("graft.aux.skip", "1")
     val loadStart = loadAvg
-    val spark = graft.tools.Local.session(cpus.toInt)
+    val spark = graft.tools.Local.session(cpus)
 
     // Warmup: one untimed pass per distinct machinery shape (agg, join,
     // udaf top-k, streaming microbatch) so one-time JVM/codegen/stream
@@ -122,17 +122,14 @@ object Bench {
           java.nio.file.Files.readAllBytes(prevFile.toPath), "UTF-8"))
       else None
     } catch { case _: Throwable => None }
-    // per-query gates only compare LIKE FORMS (review finding): a
-    // dumps-timed run against a production-form prev (or vice versa)
-    // would either flood regression_suspect with the dump cost or mask
-    // a real 2x behind inflated prev entries. Artifacts predating the
-    // dumps_timed stamp were all dumps-timed.
-    val prevComparable = prevJson.forall(pj =>
-      parseFlag(pj, "dumps_timed").getOrElse(true) == dumpsTimed)
-    if (!prevComparable) System.err.println(
-      "[bench] bench_prev.json was recorded on the other dumps_timed form — " +
-        "per-query retime/regression gates and norm_vs_prev are disabled " +
-        "for this run (re-record the baseline on this form to re-arm them)")
+    // per-query gates only compare LIKE FORMS on LIKE HOSTS (see
+    // prevMismatch)
+    val prevMismatchWhy = prevJson.flatMap(prevMismatch(_, dumpsTimed, cpus))
+    prevMismatchWhy.foreach(why => System.err.println(
+      s"[bench] bench_prev.json $why — per-query retime/regression gates " +
+        "and norm_vs_prev are disabled for this run (re-record the " +
+        "baseline on this form and core count to re-arm them)"))
+    val prevComparable = prevMismatchWhy.isEmpty
     val prevJsonC = prevJson.filter(_ => prevComparable)
     val prevTimes: Map[String, Double] =
       prevJsonC.map(parseQueryTimes).getOrElse(Map.empty)
@@ -293,7 +290,7 @@ object Bench {
     if (suspects.nonEmpty)
       System.err.println(s"[bench] REGRESSION SUSPECT (retime confirmed >=2x " +
         f"prev at load scale $loadScale%.2f): ${suspects.mkString(", ")}")
-    val json = s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"sf":"$sfDir","runs":$runs,"failed":${failed.size},"baseline_set_total":$baseTotal,"n_queries":${results.size},"dumps_timed":$dumpsTimed,"load_scale":$loadScale,"regression_suspect":$suspectsJson,$normJson,"retimes":$retimesJson,"mem":$memJson}"""
+    val json = s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"sf":"$sfDir","runs":$runs,"failed":${failed.size},"baseline_set_total":$baseTotal,"n_queries":${results.size},"dumps_timed":$dumpsTimed,"cpus":$cpus,"load_scale":$loadScale,"regression_suspect":$suspectsJson,$normJson,"retimes":$retimesJson,"mem":$memJson}"""
     // The FULL artifact (per-query timings + mem) goes to a file and an
     // early stdout line. It cannot be the driver's parse target: at 120+
     // queries the line is ~12 KB, and the driver keeps only the last
@@ -376,6 +373,25 @@ object Bench {
   } catch { case e: Throwable =>
     System.err.println(s"[bench] regression diff skipped: ${e.getMessage}")
   }
+
+  /** Why `prevJson`'s per-query timings cannot be compared with this
+    * run's, if they cannot:
+    *  - recorded on the other `dumps_timed` form — a dumps-timed run
+    *    against a production-form prev (or vice versa) would either
+    *    flood regression_suspect with the dump cost or mask a real 2x
+    *    behind inflated prev entries; artifacts predating the stamp
+    *    were all dumps-timed;
+    *  - recorded at another `cpus` — a 32-core baseline read on a
+    *    4-core host raises false regression_suspect entries on every
+    *    multi-stage query; artifacts predating the stamp count as
+    *    another core count. */
+  private[graft] def prevMismatch(
+      prevJson: String, dumpsTimed: Boolean, cpus: Int): Option[String] =
+    if (parseFlag(prevJson, "dumps_timed").getOrElse(true) != dumpsTimed)
+      Some("was recorded on the other dumps_timed form")
+    else if (!parseScalar(prevJson, "cpus").contains(cpus.toDouble))
+      Some(s"was not recorded at cpus=$cpus")
+    else None
 
   /** Queries whose environment-anomaly retime CONFIRMED the >=2x-vs-prev
     * reading instead of clearing it: median > 2x prev triggered the

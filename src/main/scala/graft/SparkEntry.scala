@@ -2457,30 +2457,32 @@ object SparkEntry {
     "q97_kneser_ney" -> ((s, dir) => graft.llm.LangModel.releasingCaches(s) {
       import graft.llm.LangModel
       val docs = t(s, dir, "documents").select(col("doc_id"), col("text"))
-      val lm = LangModel.trainKneserNey(docs.filter(col("doc_id") < 100), "text")
+      val lm = LangModel.trainKneserNeyN(
+        docs.filter(col("doc_id") < 100), "text", order = 2)
       // scored slice bounded like q85/q93: composable anchors pin the
       // oracle arithmetic, the native registries are the scale path
-      LangModel.logProbPerDocKneserNey(
+      LangModel.logProbPerDocKneserNeyN(
         docs.filter(col("doc_id") >= 100 && col("doc_id") < 700), lm, "doc_id", "text")
-        .select(col("doc_id"), round(col("kn_logp"), 6).as("kn_logp"),
-          col("kn_positions"))
+        .select(col("doc_id"), round(col("knn_logp"), 6).as("kn_logp"),
+          col("knn_positions").as("kn_positions"))
     }),
 
-    // ---- The same KN scores through the SCALE path: the saveBigram
-    // artifact of the UNPRUNED tables loads once per executor JVM; the
-    // registry recomputes every derived statistic (context sums,
-    // continuation counts, the clamped count-of-counts discount) from
-    // the stored counts and precomputes stored-pair log-probs; scoring
-    // is a zero-shuffle codegen'd projection. The SAME oracle as q97
-    // pins parity at round(6).
+    // ---- The same KN scores through the SCALE path: the order-2
+    // saveNgram artifact of the UNPRUNED tables loads once per executor
+    // JVM into the order-n KN registry, which recomputes every derived
+    // statistic (context sums, continuation counts, the clamped
+    // count-of-counts discount) from the stored counts — so training
+    // is the bare count table; scoring is a zero-shuffle codegen'd
+    // projection. The SAME oracle as q97 pins parity at round(6).
     "q99_kn_native" -> ((s, dir) => graft.llm.LangModel.releasingCaches(s) {
       import graft.llm.LangModel
       val docs = t(s, dir, "documents").select(col("doc_id"), col("text"))
-      val lm = LangModel.trainKneserNey(docs.filter(col("doc_id") < 100), "text")
+      val ng = LangModel.trainNgram(
+        docs.filter(col("doc_id") < 100), "text", order = 2, minCount = 1L)
       val lmPath = new java.io.File(
         new java.io.File(System.getProperty("java.io.tmpdir"), "graft_lm"),
         s"${dir.replaceAll("[^A-Za-z0-9.-]", "_")}_kn.lm2").toString
-      LangModel.saveBigram(lm.bigram, lmPath)
+      LangModel.saveNgram(ng, lmPath)
       docs.filter(col("doc_id") >= 100)
         .select(col("doc_id"),
           round(graft.functions.GraftFunctions.knLogProb(col("text"), lmPath), 6)
@@ -2500,30 +2502,32 @@ object SparkEntry {
     "q100_kn3" -> ((s, dir) => graft.llm.LangModel.releasingCaches(s) {
       import graft.llm.LangModel
       val docs = t(s, dir, "documents").select(col("doc_id"), col("text"))
-      val lm = LangModel.trainKneserNey3(docs.filter(col("doc_id") < 100), "text")
+      val lm = LangModel.trainKneserNeyN(
+        docs.filter(col("doc_id") < 100), "text", order = 3)
       // scored slice bounded like q85/q93 (q101 is the scale path)
-      LangModel.logProbPerDocKneserNey3(
+      LangModel.logProbPerDocKneserNeyN(
         docs.filter(col("doc_id") >= 100 && col("doc_id") < 700), lm, "doc_id", "text")
-        .select(col("doc_id"), round(col("kn3_logp"), 6).as("kn3_logp"),
-          col("kn3_positions"))
+        .select(col("doc_id"), round(col("knn_logp"), 6).as("kn3_logp"),
+          col("knn_positions").as("kn3_positions"))
     }),
 
-    // ---- The same KN3 scores through the SCALE path: the saveTrigram
-    // artifact (the SAME file the stupid-backoff registry scores)
-    // loads once per executor JVM; the registry recomputes every
-    // derived statistic — the continuation-bigram table, both
-    // discounts, all sums/fan-outs — from the stored trigram counts
-    // and precomputes stored-triple log-probs; scoring is a
-    // zero-shuffle codegen'd projection. The SAME oracle as q100 pins
-    // parity at round(6).
+    // ---- The same KN3 scores through the SCALE path: the order-3
+    // saveNgram artifact (the SAME file the stupid-backoff order-n
+    // registry scores) loads once per executor JVM; the order-n KN
+    // registry recomputes every derived statistic — the
+    // continuation-bigram table, both discounts, all sums/fan-outs —
+    // from the stored trigram counts; scoring is a zero-shuffle
+    // codegen'd projection. The SAME oracle as q100 pins parity at
+    // round(6).
     "q101_kn3_native" -> ((s, dir) => graft.llm.LangModel.releasingCaches(s) {
       import graft.llm.LangModel
       val docs = tH(s, dir, "documents").select(col("doc_id"), col("text"))
-      val lm = LangModel.trainKneserNey3(docs.filter(col("doc_id") < 100), "text")
+      val ng = LangModel.trainNgram(
+        docs.filter(col("doc_id") < 100), "text", order = 3, minCount = 1L)
       val lmPath = new java.io.File(
         new java.io.File(System.getProperty("java.io.tmpdir"), "graft_lm"),
         s"${dir.replaceAll("[^A-Za-z0-9.-]", "_")}_kn3.lm3").toString
-      LangModel.saveTrigram(lm.trigram, lmPath)
+      LangModel.saveNgram(ng, lmPath)
       docs.filter(col("doc_id") >= 100)
         .select(col("doc_id"),
           round(graft.functions.GraftFunctions.kn3LogProb(col("text"), lmPath), 6)
@@ -5255,8 +5259,9 @@ object SparkEntry {
     // interpolated Kneser–Ney replayed end to end: UNPRUNED count
     // tables, count-of-counts discount, continuation counts with the
     // Laplace-style OOV floor; the CASE arms and operator grouping
-    // mirror logProbPerDocKneserNey exactly. ONE oracle pins the
-    // composable (q97) and native-registry (q99) forms.
+    // mirror logProbPerDocKneserNeyN at order 2 (and 3) exactly. ONE
+    // oracle per order pins the composable (q97/q100) and
+    // native-registry (q99/q101) forms.
     "q97_kneser_ney" -> kneserNeyOracleSql(LmScoredBounded),
     "q99_kn_native" -> kneserNeyOracleSql(LmScoredFull),
     "q100_kn3" -> kneserNey3OracleSql(LmScoredBounded),

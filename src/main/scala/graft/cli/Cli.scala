@@ -664,7 +664,8 @@ object Curator {
       lmnPath = c.getString("lmn-path"),
       minLmnLogP = c.getDouble("min-lmn-logp").getOrElse(base.minLmnLogP),
       // interpolated-KN trigram filter: `kn3-path` points at a saved
-      // saveTrigram artifact of UNPRUNED tables (trainKneserNey3)
+      // saveTrigram artifact of UNPRUNED tables (trainTrigram with
+      // minCount = 1) or the saveNgram file of trainKneserNeyN(…, 3)
       kn3Path = c.getString("kn3-path"),
       minKn3LogP = c.getDouble("min-kn3-logp").getOrElse(base.minKn3LogP),
       // interpolated-KN ORDER-N filter: `knn-path` points at a saved

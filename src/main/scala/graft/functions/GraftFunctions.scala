@@ -475,11 +475,15 @@ object GraftFunctions {
   def lm3LogProb(c: Column, lmPath: String): Column =
     ColumnBridge.column(Lm3LogProb(ColumnBridge.expression(c), lmPath))
 
+  /** Interpolated KN over an order-2 LM file (saveBigram or saveNgram):
+    * [[knNLogProb]] pinned to order 2. */
   def knLogProb(c: Column, lmPath: String): Column =
-    ColumnBridge.column(KnLogProb(ColumnBridge.expression(c), lmPath))
+    ColumnBridge.column(KnNLogProb(ColumnBridge.expression(c), lmPath, order = 2))
 
+  /** Interpolated KN over an order-3 LM file (saveTrigram or saveNgram):
+    * [[knNLogProb]] pinned to order 3. */
   def kn3LogProb(c: Column, lmPath: String): Column =
-    ColumnBridge.column(Kn3LogProb(ColumnBridge.expression(c), lmPath))
+    ColumnBridge.column(KnNLogProb(ColumnBridge.expression(c), lmPath, order = 3))
 
   def lmNLogProb(c: Column, lmPath: String): Column =
     ColumnBridge.column(NgramLogProb(ColumnBridge.expression(c), lmPath))
@@ -508,6 +512,22 @@ object GraftFunctions {
         s"$fn $what must be a string literal, got $other")
     }
   }
+
+  /** The SQL entry of one [[KnNLogProb]] name: `order` 2 / 3 pins
+    * the LM file's order, 0 accepts any. */
+  private def knEntry(name: String, order: Int)
+      : (String, ExpressionInfo, Seq[Expression] => Expression) =
+    (name,
+      new ExpressionInfo(classOf[KnNLogProb].getName, name),
+      (es: Seq[Expression]) => {
+        require(es.length == 2, s"$name takes 2 arguments, got ${es.length}")
+        require(es(1).foldable, s"$name LM path must be a literal")
+        es(1).eval() match {
+          case s: UTF8String => KnNLogProb(es.head, s.toString, order)
+          case other => throw new IllegalArgumentException(
+            s"$name LM path must be a string literal, got $other")
+        }
+      })
 
   val functions: Seq[(String, ExpressionInfo, Seq[Expression] => Expression)] = Seq(
     ("graft_cosine",
@@ -611,28 +631,8 @@ object GraftFunctions {
             s"graft_lm2_logprob LM path must be a string literal, got $other")
         }
       }),
-    ("graft_kn_logprob",
-      new ExpressionInfo(classOf[KnLogProb].getName, "graft_kn_logprob"),
-      (es: Seq[Expression]) => {
-        require(es.length == 2, s"graft_kn_logprob takes 2 arguments, got ${es.length}")
-        require(es(1).foldable, "graft_kn_logprob LM path must be a literal")
-        es(1).eval() match {
-          case s: UTF8String => KnLogProb(es.head, s.toString)
-          case other => throw new IllegalArgumentException(
-            s"graft_kn_logprob LM path must be a string literal, got $other")
-        }
-      }),
-    ("graft_kn3_logprob",
-      new ExpressionInfo(classOf[Kn3LogProb].getName, "graft_kn3_logprob"),
-      (es: Seq[Expression]) => {
-        require(es.length == 2, s"graft_kn3_logprob takes 2 arguments, got ${es.length}")
-        require(es(1).foldable, "graft_kn3_logprob LM path must be a literal")
-        es(1).eval() match {
-          case s: UTF8String => Kn3LogProb(es.head, s.toString)
-          case other => throw new IllegalArgumentException(
-            s"graft_kn3_logprob LM path must be a string literal, got $other")
-        }
-      }),
+    knEntry("graft_kn_logprob", 2),
+    knEntry("graft_kn3_logprob", 3),
     ("graft_lm3_logprob",
       new ExpressionInfo(classOf[Lm3LogProb].getName, "graft_lm3_logprob"),
       (es: Seq[Expression]) => {
@@ -655,17 +655,7 @@ object GraftFunctions {
             s"graft_lmn_logprob LM path must be a string literal, got $other")
         }
       }),
-    ("graft_knn_logprob",
-      new ExpressionInfo(classOf[KnNLogProb].getName, "graft_knn_logprob"),
-      (es: Seq[Expression]) => {
-        require(es.length == 2, s"graft_knn_logprob takes 2 arguments, got ${es.length}")
-        require(es(1).foldable, "graft_knn_logprob LM path must be a literal")
-        es(1).eval() match {
-          case s: UTF8String => KnNLogProb(es.head, s.toString)
-          case other => throw new IllegalArgumentException(
-            s"graft_knn_logprob LM path must be a string literal, got $other")
-        }
-      }),
+    knEntry("graft_knn_logprob", 0),
     ("graft_knn_logprob_packed",
       new ExpressionInfo(classOf[KnNLogProbPacked].getName, "graft_knn_logprob_packed"),
       (es: Seq[Expression]) => {

@@ -6,17 +6,16 @@ import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCo
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
-/** Loaded interpolated Kneser–Ney ORDER-N model — [[Kn3Registry]]
-  * generalized to arbitrary order over the ordinary
+/** Loaded interpolated Kneser–Ney ORDER-N model over the ordinary
   * `LangModel.saveNgram` artifact (`KneserNeyNLm` trains at minCount=1
   * by construction; the SAME file the stupid-backoff [[NgramRegistry]]
-  * scores). Only the header's `vocab=` and the TOP `#<n>grams` section
-  * feed the model: every lower level is the continuation recursion
-  * (`c_k(g) = N1+(·g)` — distinct left extensions at order k+1), every
-  * per-context sum/fan-out and every per-level count-of-counts
-  * discount is a pure function of the stored top-order counts, so the
-  * loader recomputes them once per (JVM, path) instead of persisting a
-  * second format.
+  * scores) or a fixed-order saveBigram / saveTrigram file. Only the
+  * header's `vocab=` and the TOP section feed the model: every lower
+  * level is the continuation recursion (`c_k(g) = N1+(·g)` — distinct
+  * left extensions at order k+1), every per-context sum/fan-out and
+  * every per-level count-of-counts discount is a pure function of the
+  * stored top-order counts, so the loader recomputes them once per
+  * (JVM, path) instead of persisting a second format.
   *
   * Scoring is the live bottom-up recursion (term-for-term
   * `LangModel.logProbPerDocKneserNeyN`'s operand order, so parity with
@@ -27,11 +26,11 @@ import org.apache.spark.unsafe.types.UTF8String
   * unseen → `p_{j−1}` unchanged.
   *
   * Memory shape: exact \t-joined string keys in per-level hash maps
-  * (the [[Kn3Registry]] trade — KN's recursion needs live counts, not
-  * precomputable log-probs, at every level except the deepest; the
-  * fingerprinted/quantized flat layout is the stupid-backoff
-  * registry's). A per-level size line logs what an order-5 table
-  * would cost an executor before anyone ships it.
+  * (KN's recursion needs live counts, not precomputable log-probs, at
+  * every level except the deepest; the fingerprinted/quantized flat
+  * layout is the stupid-backoff registry's). A per-level size line
+  * logs what an order-5 table would cost an executor before anyone
+  * ships it.
   */
 final class KnNLmTable(
     val order: Int,
@@ -118,7 +117,8 @@ private[functions] final class KnChain(
     val discounts: Array[Double])
 
 /** Executor-side order-n KN cache: one load per (JVM, path), over the
-  * same saveNgram artifact the stupid-backoff NgramRegistry scores. */
+  * same saveNgram / saveBigram / saveTrigram artifacts the
+  * stupid-backoff registries score. */
 object KnNRegistry {
   private val cache =
     new java.util.concurrent.ConcurrentHashMap[String, KnNLmTable]()
@@ -132,11 +132,15 @@ object KnNRegistry {
     new KnNLmTable(ch.order, ch.p1, ch.p1Oov, ch.cnts, ch.ctxs, ch.discounts)
   }
 
-  /** Parse a saveNgram artifact and build the raw count chain (top
+  /** Parse a KN count artifact and build the raw count chain (top
     * section verbatim, continuation counts below) — the smoothing-
     * agnostic half, shared with the modified-KN loaders
     * ([[KnModRegistry]]): returns (order, vocab, level tables at
-    * index j-2). */
+    * index j-2). Three layouts carry the same unigram section plus
+    * one section per order: the `saveNgram` file (`#<k>grams`
+    * markers, `order=` and `counts=` in the header) and the fixed-
+    * order `saveBigram` / `saveTrigram` files (`#pairs` / `#triples`
+    * markers, `pairs=` / `triples=` counts) — order 2 and 3. */
   private[functions] def buildCounts(
       path: String): (Int, Long, Array[java.util.HashMap[String, java.lang.Long]]) = {
     val p = new org.apache.hadoop.fs.Path(path)
@@ -145,20 +149,31 @@ object KnNRegistry {
     val lines =
       try scala.io.Source.fromInputStream(in, "UTF-8").getLines().toArray
       finally in.close()
-    require(lines.nonEmpty && lines(0).startsWith("#graft-ngram-lm v1 "),
-      s"not a graft ngram LM file (KN-n scores the saveNgram artifact): $path")
-    val header = lines(0).split(' ')
+    val header = lines.headOption.getOrElse("").split(' ')
     def scalar(key: String): String = header
       .collectFirst { case kv if kv.startsWith(key + "=") =>
         kv.substring(key.length + 1) }
       .getOrElse(throw new IllegalArgumentException(
-        s"ngram LM header missing $key= in: ${lines(0)}"))
-    val order = scalar("order").toInt
-    require(order >= 2 && order <= 8, s"ngram LM order out of range: $order")
+        s"LM header missing $key= in: ${header.mkString(" ")}"))
+    // (order, header line count per order 2..order, marker -> order)
+    val (order, counts, markers) = header.take(2).mkString(" ") match {
+      case "#graft-ngram-lm v1" =>
+        val o = scalar("order").toInt
+        require(o >= 2 && o <= 8, s"ngram LM order out of range: $o")
+        val c = scalar("counts").split(',').map(_.toLong)
+        require(c.length == o - 1,
+          s"ngram LM $path header counts= must list ${o - 1} orders")
+        (o, c.toSeq, (2 to o).map(k => s"#${k}grams" -> k).toMap)
+      case "#graft-bigram-lm v1" =>
+        (2, Seq(scalar("pairs").toLong), Map("#pairs" -> 2))
+      case "#graft-trigram-lm v1" =>
+        (3, Seq(scalar("pairs").toLong, scalar("triples").toLong),
+          Map("#pairs" -> 2, "#triples" -> 3))
+      case _ => throw new IllegalArgumentException(
+        "not a graft n-gram LM file (KN scores the saveNgram, saveBigram " +
+          s"and saveTrigram artifacts): $path")
+    }
     val vocab = scalar("vocab").toLong
-    val counts = scalar("counts").split(',').map(_.toLong)
-    require(counts.length == order - 1,
-      s"ngram LM $path header counts= must list ${order - 1} orders")
     // one pass over the file: validate section order/line counts, keep
     // only the TOP section's raw grams
     val topExpected = counts(order - 2)
@@ -170,18 +185,15 @@ object KnNRegistry {
     while (i < lines.length) {
       val line = lines(i)
       if (NgramRegistry.isSectionMarker(line)) {
-        val m = "^#(\\d+)grams$".r.findFirstMatchIn(line).getOrElse(
-          throw new IllegalArgumentException(
-            s"ngram LM $path: bad section marker '$line'"))
-        val k = m.group(1).toInt
+        val k = markers.getOrElse(line, throw new IllegalArgumentException(
+          s"LM $path: bad section marker '$line'"))
         require(k == section + 1,
-          s"ngram LM $path: section #${k}grams out of order (expected #${section + 1}grams)")
+          s"LM $path: section '$line' out of order (expected order ${section + 1})")
         section = k
       } else if (line.nonEmpty) {
         if (section == order) {
           val tab = line.lastIndexOf('\t')
-          require(tab > 0,
-            s"ngram LM $path: malformed order-$order line: '$line'")
+          require(tab > 0, s"LM $path: malformed order-$order line: '$line'")
           top.put(line.substring(0, tab),
             java.lang.Long.valueOf(line.substring(tab + 1).toLong))
           ()
@@ -191,10 +203,10 @@ object KnNRegistry {
       i += 1
     }
     require(seen(1) == vocab,
-      s"ngram LM $path: header vocab=$vocab but ${seen(1)} unigram lines")
+      s"LM $path: header vocab=$vocab but ${seen(1)} unigram lines")
     (2 to order).foreach { k =>
       require(seen(k) == counts(k - 2),
-        s"ngram LM $path: header says ${counts(k - 2)} ${k}-grams but ${seen(k)} lines")
+        s"LM $path: header says ${counts(k - 2)} ${k}-grams but ${seen(k)} lines")
     }
     // continuation recursion: level k counts = distinct first-word
     // extensions at level k+1 (keys there are distinct grams, so each
@@ -283,36 +295,51 @@ object KnNRegistry {
     new KnChain(order, p1, 1.0 / denom1, cnts, ctxs, discounts)
   }
 
-  def score(path: String, text: UTF8String): java.lang.Double =
-    get(path).avgLogProb(text)
+  /** Score under the model at `path`; `order` > 0 pins the file's
+    * order (the order-2/3 SQL names reject a file of another order). */
+  def score(path: String, order: Int, text: UTF8String): java.lang.Double = {
+    val t = get(path)
+    require(order == 0 || t.order == order,
+      s"order-$order KN scoring was given an order-${t.order} LM file: $path")
+    t.avgLogProb(text)
+  }
 }
 
 /** `graft_knn_logprob(string, 'lm-path') -> double`: average log10
   * probability under interpolated Kneser–Ney order-n smoothing over a
-  * saved UNPRUNED order-n LM (`LangModel.saveNgram` of a
-  * `trainKneserNeyN(...).ngram`) — the zero-shuffle scale form of
+  * saved UNPRUNED LM (`LangModel.saveNgram` of a
+  * `trainKneserNeyN(...).ngram`, or a minCount=1 saveBigram /
+  * saveTrigram file) — the zero-shuffle scale form of
   * `LangModel.logProbPerDocKneserNeyN`; parity at the shared oracle's
-  * 6-decimal rounding. Null input / no tokens → null. */
-case class KnNLogProb(child: Expression, lmPath: String)
+  * 6-decimal rounding. Null input / no tokens → null. `order` = 2 / 3
+  * is `graft_kn_logprob` / `graft_kn3_logprob`: the same scorer
+  * pinned to that order, so a file of another order is rejected;
+  * 0 accepts any order. */
+case class KnNLogProb(child: Expression, lmPath: String, order: Int = 0)
     extends UnaryExpression {
-  require(lmPath.nonEmpty, "graft_knn_logprob needs an LM path")
+  require(lmPath.nonEmpty, s"$prettyName needs an LM path")
 
   override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
     case _: StringType => TypeCheckResult.TypeCheckSuccess
     case t => TypeCheckResult.TypeCheckFailure(
-      s"graft_knn_logprob expects string, got $t")
+      s"$prettyName expects string, got $t")
   }
   override def dataType: DataType = DoubleType
   override def nullable: Boolean = true
-  override def prettyName: String = "graft_knn_logprob"
+  override def prettyName: String = order match {
+    case 2 => "graft_kn_logprob"
+    case 3 => "graft_kn3_logprob"
+    case _ => "graft_knn_logprob"
+  }
 
   override protected def nullSafeEval(t: Any): Any =
-    KnNRegistry.score(lmPath, t.asInstanceOf[UTF8String])
+    KnNRegistry.score(lmPath, order, t.asInstanceOf[UTF8String])
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
     val pathRef = ctx.addReferenceObj("lmPath", lmPath, "java.lang.String")
     nullSafeCodeGen(ctx, ev, c => s"""
-      java.lang.Double ${ev.value}_r = graft.functions.KnNRegistry.score($pathRef, $c);
+      java.lang.Double ${ev.value}_r =
+        graft.functions.KnNRegistry.score($pathRef, $order, $c);
       if (${ev.value}_r == null) { ${ev.isNull} = true; }
       else { ${ev.value} = ${ev.value}_r.doubleValue(); }
     """)

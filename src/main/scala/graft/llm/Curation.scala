@@ -116,12 +116,13 @@ object Curation {
         * annotate only. */
       minLmnLogP: Double = Double.NegativeInfinity,
       /** Saved TRIGRAM LM file ([[LangModel.saveTrigram]] of an
-        * UNPRUNED `trainKneserNey3(...).trigram`), scored with
-        * interpolated Kneser–Ney smoothing — the perplexity-optimal
-        * counterpart to the stupid-backoff filters: a PROPER
-        * distribution whose scores are comparable across corpora,
-        * which is what CCNet-style head/middle/tail bucketing by
-        * perplexity assumes (KenLM is a modified-KN model). Adds
+        * UNPRUNED `trainTrigram(..., minCount = 1)`, or the
+        * [[LangModel.saveNgram]] file of a `trainKneserNeyN(..., 3)`),
+        * scored with interpolated Kneser–Ney smoothing — the
+        * perplexity-optimal counterpart to the stupid-backoff filters:
+        * a PROPER distribution whose scores are comparable across
+        * corpora, which is what CCNet-style head/middle/tail bucketing
+        * by perplexity assumes (KenLM is a modified-KN model). Adds
         * `kn3_logp`; stackable with the other LM filters. */
       kn3Path: Option[String] = None,
       /** Keep documents with `kn3_logp >= minKn3LogP`. -Infinity =

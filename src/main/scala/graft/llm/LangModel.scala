@@ -38,54 +38,26 @@ final case class NgramLm(order: Int, unigram: UnigramLm, tables: Seq[DataFrame])
   def table(k: Int): DataFrame = tables(k - 2)
 }
 
-/** Interpolated Kneser–Ney bigram LM (Kneser & Ney 1995; Chen &
-  * Goodman 1999 §3): the UNPRUNED bigram model plus the absolute
-  * discount `D` estimated from the bigram count-of-counts
-  * (`D = n1 / (n1 + 2·n2)`, Ney et al. 1994). Unlike stupid backoff
-  * this is a PROPER conditional distribution — for every seen context
-  * the probabilities over vocab ∪ OOV sum to exactly 1
-  * (LangModelSpec pins it) — which is what makes its perplexities
-  * comparable across corpora. minCount is fixed at 1: the discount IS
-  * the singleton treatment, pruning would break the sums the
-  * normalization proof needs. */
-final case class KneserNeyLm(bigram: BigramLm, discount: Double) {
-  require(discount > 0 && discount <= 1, s"discount must be in (0,1], got $discount")
-}
-
-/** Interpolated Kneser–Ney TRIGRAM LM (Chen & Goodman 1999 §3's
-  * recursive formulation at order 3): the UNPRUNED trigram model plus
-  * one absolute discount per level — `d3` from the trigram
-  * count-of-counts, `d2` from the count-of-counts of the CONTINUATION
-  * bigram table N1+(·ab) (how many distinct words precede "a b" in a
-  * trigram — the middle order of KN uses continuation counts, not raw
-  * counts, all the way down). Like the bigram form it is a PROPER
-  * distribution at every level: for any context, probabilities over
-  * vocab ∪ OOV sum to exactly 1 (LangModelSpec pins all three
-  * levels). Everything below the top order derives from the trigram
-  * table alone, so the [[LangModel.saveTrigram]] artifact is
-  * sufficient for the native scorer to reconstruct the model. */
-final case class KneserNey3Lm(trigram: TrigramLm, d3: Double, d2: Double) {
-  require(d3 > 0 && d3 <= 1, s"d3 must be in (0,1], got $d3")
-  require(d2 > 0 && d2 <= 1, s"d2 must be in (0,1], got $d2")
-}
-
-/** Interpolated Kneser–Ney ORDER-N LM (Chen & Goodman 1999 §3's full
-  * recursion — what KenLM actually ships and what CCNet's perplexity
-  * filter assumes): the UNPRUNED minCount=1 [[NgramLm]] plus one
-  * absolute discount per level n..2, each estimated from the
-  * count-of-counts of THAT level's own count table — raw counts at the
-  * top order, CONTINUATION counts below (`c_k(g) = N1+(·g)` = distinct
-  * left extensions at order k+1, recursively — Ney et al. 1994).
-  * `discounts(j-2) = D_j`. Only the top-order table and the unigram
-  * vocab feed scoring — every lower level derives from them by the
-  * continuation recursion, so the ordinary [[LangModel.saveNgram]]
-  * artifact is sufficient for the native registry
-  * ([[graft.functions.KnNRegistry]]), exactly the [[KneserNey3Lm]] /
-  * saveTrigram contract one order generalized. At order 2 and 3 the
-  * recursion collapses to [[KneserNeyLm]] / [[KneserNey3Lm]]
-  * (LangModelSpec pins bit-equality at 3). Like them it is a PROPER
-  * distribution at every level: for any context, probabilities over
-  * vocab ∪ OOV sum to exactly 1. */
+/** Interpolated Kneser–Ney ORDER-N LM (Kneser & Ney 1995; Chen &
+  * Goodman 1999 §3's full recursion — what KenLM actually ships and
+  * what CCNet's perplexity filter assumes): the UNPRUNED minCount=1
+  * [[NgramLm]] plus one absolute discount per level n..2, each
+  * estimated from the count-of-counts of THAT level's own count table
+  * — raw counts at the top order, CONTINUATION counts below
+  * (`c_k(g) = N1+(·g)` = distinct left extensions at order k+1,
+  * recursively — Ney et al. 1994). `discounts(j-2) = D_j`. minCount is
+  * fixed at 1: the discount IS the singleton treatment, pruning would
+  * break the sums the normalization proof needs. Only the top-order
+  * table and the unigram vocab feed scoring — every lower level
+  * derives from them by the continuation recursion, so the ordinary
+  * [[LangModel.saveNgram]] artifact (or, at order 2 / 3, a minCount=1
+  * [[LangModel.saveBigram]] / [[LangModel.saveTrigram]] file) is
+  * sufficient for the native registry
+  * ([[graft.functions.KnNRegistry]]). Unlike stupid backoff it is a
+  * PROPER distribution at every level: for any context, probabilities
+  * over vocab ∪ OOV sum to exactly 1 (LangModelSpec pins it at orders
+  * 2, 3 and 4) — which is what makes its perplexities comparable
+  * across corpora. */
 final case class KneserNeyNLm(ngram: NgramLm, discounts: Seq[Double]) {
   require(discounts.length == ngram.order - 1,
     s"need ${ngram.order - 1} discounts (D_${ngram.order}..D_2), got ${discounts.length}")
@@ -300,209 +272,6 @@ object LangModel {
     TrigramLm(trainBigram(ref, textCol, minCount), triples)
   }
 
-  /** Train an interpolated Kneser–Ney bigram LM: the minCount=1
-    * bigram tables (see [[KneserNeyLm]] for why pruning is off) plus
-    * the count-of-counts discount estimate. One extra tiny aggregate
-    * over the bigram table (2 longs of driver egress) beyond
-    * [[trainBigram]]'s cost. */
-  def trainKneserNey(ref: DataFrame, textCol: String): KneserNeyLm = {
-    val bg = trainBigram(ref, textCol, minCount = 1L)
-    val r = bg.table.agg(
-      coalesce(sum((col("cnt2") === 1).cast("long")), lit(0L)).as("n1"),
-      coalesce(sum((col("cnt2") === 2).cast("long")), lit(0L)).as("n2")).head()
-    val n1 = r.getLong(0); val n2 = r.getLong(1)
-    // n1 = 0 would give D = 0 (no discounting → zero mass for unseen
-    // continuations → -Inf scores), so fall back to the conventional
-    // 0.5; n2 = 0 gives D = 1 (singletons fully discounted), which is
-    // well-defined under max(c−D, 0) and kept. The q97 oracle and the
-    // native registry replay this exact arithmetic.
-    val d = if (n1 == 0) 0.5 else math.min(n1.toDouble / (n1 + 2.0 * n2), 1.0)
-    KneserNeyLm(bg, d)
-  }
-
-  /** Composable interpolated-KN scoring: one row per doc with
-    * `kn_logp` (average log10 probability over all positions) and
-    * `kn_positions`. Derived statistics, all from the unpruned bigram
-    * table so every sum is complete:
-    *  - `ctx(w1)   = Σ_w2 c(w1,w2)` — the conditional denominator;
-    *  - `nfwd(w1)  = |{w2 : c(w1,w2) > 0}|` — distinct continuations,
-    *    the interpolation weight's numerator;
-    *  - `nbwd(w2)  = |{w1 : c(w1,w2) > 0}|` — the CONTINUATION count:
-    *    how many contexts w2 completes ("Francisco" is frequent but
-    *    completes almost nothing — the insight the method is named for);
-    *  - `pcont(w2) = (nbwd(w2) + 1) / (B + V + 1)` with B = distinct
-    *    bigram types — the unigram-Laplace trick applied to
-    *    continuation counts, reserving `1/(B+V+1)` for OOV so the
-    *    distribution still sums to exactly 1 over vocab ∪ OOV.
-    * Per position: seen context →
-    * `(max(c−D,0) + D·nfwd(w1)·pcont(w2)) / ctx(w1)`; unseen context
-    * (and position 0) → `pcont(w2)`. Every piece is SQL arithmetic on
-    * the two count tables, so the q97 oracle replays training AND
-    * scoring verbatim.
-    *
-    * Shape: in-row pair construction; the fwd/bwd aggregates are one
-    * map-side-collapsed groupBy each over the UNPRUNED bigram table,
-    * so their size is the reference's bigram-type count and AQE picks
-    * broadcast vs shuffle for the scoring joins; one final per-doc
-    * aggregate, same as the other composable scorers. */
-  def logProbPerDocKneserNey(
-      docs: DataFrame,
-      lm: KneserNeyLm,
-      idCol: String,
-      textCol: String): DataFrame = {
-    val bt = lm.bigram.table
-    // persisted: each feeds two scoring branches (and `bwd` also the
-    // position-0 frame) — one tiny vocab-sized table apiece
-    val fwd = bt.groupBy("w1")
-      .agg(sum("cnt2").as("__ctx"), count(lit(1)).as("__nfwd")).persistT()
-    val bwd = bt.groupBy("w2").agg(count(lit(1)).as("__nbwd")).persistT()
-    val r = bt.agg(count(lit(1))).head()
-    val denomCont = (r.getLong(0) + lm.bigram.unigram.vocab + 1).toDouble
-    def pcont(nbwd: Column): Column =
-      (coalesce(nbwd, lit(0L)) + lit(1L)).cast("double") / lit(denomCont)
-    val dD = lm.discount
-    val base = docs
-      .select(col(idCol), Dedup.tokens(col(textCol)).as("tk"))
-      .filter(size(col("tk")) > 0)
-    // position 0: the continuation unigram (interpolated KN's lowest
-    // order — the distribution position i>0 interpolates toward)
-    val first = base
-      .select(col(idCol), element_at(col("tk"), 1).as("w2"))
-      .join(bwd, Seq("w2"), "left")
-      .select(col(idCol), log10(pcont(col("__nbwd"))).as("logp"))
-    val pairs = base
-      .select(col(idCol), explode(pairsOf(col("tk"))).as("p"))
-      .select(col(idCol), col("p.w1"), col("p.w2"))
-      .join(bt, Seq("w1", "w2"), "left")
-      .join(fwd, Seq("w1"), "left")
-      .join(bwd, Seq("w2"), "left")
-      .select(col(idCol),
-        when(col("__ctx").isNotNull,
-          log10((greatest(coalesce(col("cnt2"), lit(0L)).cast("double") - lit(dD),
-            lit(0.0)) +
-            lit(dD) * col("__nfwd").cast("double") * pcont(col("__nbwd"))) /
-            col("__ctx").cast("double")))
-        .otherwise(log10(pcont(col("__nbwd"))))
-        .as("logp"))
-    first.unionByName(pairs)
-      .groupBy(idCol)
-      .agg(avg("logp").as("kn_logp"), count(lit(1)).as("kn_positions"))
-  }
-
-  /** Train an interpolated Kneser–Ney trigram LM: the minCount=1
-    * trigram tables plus the two count-of-counts discount estimates
-    * (trigram counts for `d3`; continuation-bigram counts for `d2` —
-    * the singleton statistics OF THE LEVEL each discount applies to,
-    * Ney et al. 1994). Beyond [[trainTrigram]]'s cost: one aggregate
-    * over the trigram table per discount, 2 longs of driver egress
-    * each. Same n1=0 → 0.5 fallback and ≤1 cap as the bigram form. */
-  def trainKneserNey3(ref: DataFrame, textCol: String): KneserNey3Lm = {
-    val t3 = trainTrigram(ref, textCol, minCount = 1L)
-    def discountOf(counts: DataFrame, cntCol: String): Double = {
-      val r = counts.agg(
-        coalesce(sum((col(cntCol) === 1).cast("long")), lit(0L)).as("n1"),
-        coalesce(sum((col(cntCol) === 2).cast("long")), lit(0L)).as("n2")).head()
-      val n1 = r.getLong(0); val n2 = r.getLong(1)
-      if (n1 == 0) 0.5 else math.min(n1.toDouble / (n1 + 2.0 * n2), 1.0)
-    }
-    val cbg = t3.table.groupBy("w2", "w3").agg(count(lit(1)).as("ccnt"))
-    KneserNey3Lm(t3, discountOf(t3.table, "cnt3"), discountOf(cbg, "ccnt"))
-  }
-
-  /** Composable interpolated-KN trigram scoring: one row per doc with
-    * `kn3_logp` (average log10 probability over all positions) and
-    * `kn3_positions`. All derived statistics come from the UNPRUNED
-    * trigram table, the continuation principle applied recursively:
-    *  - top level, position i ≥ 2 with context (w1,w2):
-    *    `ctx3(w1,w2) = Σ_w c(w1w2w)`, `nfwd3(w1,w2) = |{w : c>0}|`;
-    *    seen → `(max(c−D3,0) + D3·nfwd3·p2cont(w3|w2)) / ctx3`,
-    *    unseen context → `p2cont(w3|w2)`;
-    *  - middle level over CONTINUATION counts `cbg(a,b) = N1+(·ab)`
-    *    (distinct w1 preceding "a b" — raw counts would overweight
-    *    words frequent only inside one frozen phrase):
-    *    `ctx2c(a) = Σ_b cbg(a,b)`, `nfwd2c(a) = |{b : cbg>0}|`;
-    *    seen → `(max(cbg−D2,0) + D2·nfwd2c·p1cont(b)) / ctx2c`,
-    *    unseen → `p1cont(b)`; position 1 scores here, position 0 at
-    *    the level below;
-    *  - bottom level `p1cont(w) = (N1+(·w) + 1) / (B′ + V + 1)` with
-    *    `N1+(·w) = |{a : cbg(a,w)>0}|` and `B′ = |cbg|` — the same
-    *    Laplace-over-continuation-counts OOV floor as the bigram
-    *    form, summing to exactly 1 over vocab ∪ OOV.
-    * Every piece is SQL arithmetic on the trigram count table, so the
-    * q100 oracle replays training AND scoring verbatim.
-    *
-    * Shape: in-row gram construction; the derived tables are one
-    * map-side-collapsed groupBy each over the reference's trigram
-    * types (AQE picks broadcast for the scoring joins); one final
-    * per-doc aggregate — [[logProbPerDocKneserNey]] one order up. */
-  def logProbPerDocKneserNey3(
-      docs: DataFrame,
-      lm: KneserNey3Lm,
-      idCol: String,
-      textCol: String): DataFrame = {
-    val t3 = lm.trigram.table
-    // persisted: cbg feeds fwd2/bwd1/bPrime AND two scoring branches;
-    // fwd2/bwd1 join into up to three branches each. All are bounded by
-    // the reference's gram-type counts.
-    val cbg = t3.groupBy("w2", "w3").agg(count(lit(1)).as("__ccnt")).persistT()
-    val fwd3 = t3.groupBy("w1", "w2")
-      .agg(sum("cnt3").as("__ctx3"), count(lit(1)).as("__nfwd3")).persistT()
-    val fwd2 = cbg.groupBy("w2")
-      .agg(sum("__ccnt").as("__ctx2"), count(lit(1)).as("__nfwd2")).persistT()
-    val bwd1 = cbg.groupBy("w3").agg(count(lit(1)).as("__nbwd1")).persistT()
-    val bPrime = cbg.count()
-    val denomCont = (bPrime + lm.trigram.bigram.unigram.vocab + 1).toDouble
-    def p1cont(nbwd1: Column): Column =
-      (coalesce(nbwd1, lit(0L)) + lit(1L)).cast("double") / lit(denomCont)
-    // p2cont(b | a) given the joined __ccnt/__ctx2/__nfwd2/__nbwd1 row
-    def p2cont(ccnt: Column, ctx2: Column, nfwd2: Column, nbwd1: Column): Column =
-      when(ctx2.isNotNull,
-        (greatest(coalesce(ccnt, lit(0L)).cast("double") - lit(lm.d2), lit(0.0)) +
-          lit(lm.d2) * nfwd2.cast("double") * p1cont(nbwd1)) / ctx2.cast("double"))
-        .otherwise(p1cont(nbwd1))
-    val base = docs
-      .select(col(idCol), Dedup.tokens(col(textCol)).as("tk"))
-      .filter(size(col("tk")) > 0)
-    // position 0: the continuation unigram
-    val first = base
-      .select(col(idCol), element_at(col("tk"), 1).as("w3"))
-      .join(bwd1, Seq("w3"), "left")
-      .select(col(idCol), log10(p1cont(col("__nbwd1"))).as("logp"))
-    // position 1: the continuation-bigram level, context = token 1
-    val second = base
-      .filter(size(col("tk")) >= 2)
-      .select(col(idCol), element_at(col("tk"), 1).as("w2"),
-        element_at(col("tk"), 2).as("w3"))
-      .join(cbg, Seq("w2", "w3"), "left")
-      .join(fwd2, Seq("w2"), "left")
-      .join(bwd1, Seq("w3"), "left")
-      .select(col(idCol),
-        log10(p2cont(col("__ccnt"), col("__ctx2"), col("__nfwd2"),
-          col("__nbwd1"))).as("logp"))
-    // positions ≥ 2: full trigram recursion
-    val triples = base
-      .select(col(idCol), explode(triplesOf(col("tk"))).as("t"))
-      .select(col(idCol), col("t.w1"), col("t.w2"), col("t.w3"))
-      .join(t3, Seq("w1", "w2", "w3"), "left")
-      .join(fwd3, Seq("w1", "w2"), "left")
-      .join(cbg, Seq("w2", "w3"), "left")
-      .join(fwd2, Seq("w2"), "left")
-      .join(bwd1, Seq("w3"), "left")
-      .select(col(idCol),
-        when(col("__ctx3").isNotNull,
-          log10((greatest(coalesce(col("cnt3"), lit(0L)).cast("double") - lit(lm.d3),
-            lit(0.0)) +
-            lit(lm.d3) * col("__nfwd3").cast("double") *
-              p2cont(col("__ccnt"), col("__ctx2"), col("__nfwd2"), col("__nbwd1"))) /
-            col("__ctx3").cast("double")))
-        .otherwise(log10(p2cont(col("__ccnt"), col("__ctx2"), col("__nfwd2"),
-          col("__nbwd1"))))
-        .as("logp"))
-    first.unionByName(second).unionByName(triples)
-      .groupBy(idCol)
-      .agg(avg("logp").as("kn3_logp"), count(lit(1)).as("kn3_positions"))
-  }
-
   /** Sliding `(w1..wn)` grams of a token array, in order — the
     * order-n generalization of [[pairsOf]]/[[triplesOf]], shared by
     * training and scoring. */
@@ -657,6 +426,13 @@ object LangModel {
       }
     } finally out.close()
     graft.functions.NgramRegistry.invalidate(path)
+    invalidateKn(path)
+  }
+
+  /** Drop every KN registry's entry for `path` — all four read the
+    * saveNgram / saveBigram / saveTrigram artifacts, so each save
+    * that can rewrite one of them keeps every cache honest. */
+  private def invalidateKn(path: String): Unit = {
     graft.functions.KnNRegistry.invalidate(path)
     graft.functions.KnNPackedRegistry.invalidate(path)
     graft.functions.KnModRegistry.invalidate(path)
@@ -673,8 +449,11 @@ object LangModel {
       .agg(count(lit(1)).as(s"cnt$k"))
 
   /** Ney et al. 1994's count-of-counts discount estimate over one
-    * count table — the exact arithmetic [[trainKneserNey]]/
-    * [[trainKneserNey3]] use (n1 = 0 → 0.5 fallback; capped at 1). */
+    * count table: `D = n1 / (n1 + 2·n2)`. n1 = 0 would give D = 0 (no
+    * discounting → zero mass for unseen continuations → -Inf scores),
+    * so it falls back to the conventional 0.5; n2 = 0 gives D = 1,
+    * well-defined under max(c−D, 0) and kept. The oracles and the
+    * native registry replay this exact arithmetic. */
   private def discountOf(counts: DataFrame, cntCol: String): Double = {
     val r = counts.agg(
       coalesce(sum((col(cntCol) === 1).cast("long")), lit(0L)).as("n1"),
@@ -708,11 +487,10 @@ object LangModel {
     KneserNeyNLm(ng, ds.toIndexedSeq)
   }
 
-  /** Composable interpolated-KN order-n scoring — the
-    * [[logProbPerDocKneserNey3]] recursion at arbitrary order. One row
-    * per doc: `knn_logp` (average log10 probability over all
-    * positions), `knn_positions`. Derived statistics, all from the
-    * UNPRUNED top table via [[continuationTable]]:
+  /** Composable interpolated-KN order-n scoring. One row per doc:
+    * `knn_logp` (average log10 probability over all positions),
+    * `knn_positions`. Derived statistics, all from the UNPRUNED top
+    * table via [[continuationTable]]:
     *  - `cnt_k` — raw counts at k = n, continuation counts below;
     *  - `ctx_k / nfwd_k` — per-context sums and fan-outs of `cnt_k`;
     *  - `nbwd1(w) = |{a : cnt_2(a,w) > 0}|` and
@@ -722,8 +500,9 @@ object LangModel {
     * bottom-up recursion: `p_1 = p1cont`; seen level-j context →
     * `p_j = (max(c_j − D_j, 0) + D_j·nfwd_j·p_{j−1}) / ctx_j`, unseen
     * → `p_j = p_{j−1}`. Every piece is SQL arithmetic on the top
-    * count table, so the q114 oracle replays training AND scoring
-    * verbatim (the generated [[SparkEntry]] CTE chain).
+    * count table, so the oracles replay training AND scoring verbatim
+    * (q97 at order 2, q100 at 3, and the generated [[SparkEntry]] CTE
+    * chain of q114 at 4).
     *
     * Shape: in-row gram construction; the derived tables are one
     * map-side-collapsed groupBy each over the reference's gram TYPES
@@ -1121,7 +900,8 @@ object LangModel {
     * would follow it in a data line — then `w1<TAB>w2<TAB>count`
     * lines). Both collects are minCount-bounded driver egress, sorted
     * for deterministic bytes; [[graft.functions.Lm2Registry]] loads it
-    * once per executor JVM. */
+    * once per executor JVM, and so does [[graft.functions.KnNRegistry]]
+    * (interpolated KN at order 2) for a minCount=1 model. */
   def saveBigram(lm: BigramLm, path: String): Unit = {
     val spark = lm.unigram.table.sparkSession
     val uniRows = lm.unigram.table.orderBy("token").collect()
@@ -1145,15 +925,15 @@ object LangModel {
       }
     } finally out.close()
     graft.functions.Lm2Registry.invalidate(path)
-    // the KN registry scores the SAME artifact — keep both caches honest
-    graft.functions.KnRegistry.invalidate(path)
+    invalidateKn(path)
   }
 
   /** Persist a trigram LM as ONE text file (unigram section, `#pairs`,
     * `#triples` — tab-separated lines, sorted for deterministic
     * bytes). All three collects are minCount-bounded driver egress;
     * [[graft.functions.Lm3Registry]] loads the file once per executor
-    * JVM and precomputes every ratio. */
+    * JVM and precomputes every ratio; [[graft.functions.KnNRegistry]]
+    * scores a minCount=1 model's file with interpolated KN at order 3. */
   def saveTrigram(lm: TrigramLm, path: String): Unit = {
     val spark = lm.table.sparkSession
     val uniRows = lm.bigram.unigram.table.orderBy("token").collect()
@@ -1186,8 +966,7 @@ object LangModel {
       }
     } finally out.close()
     graft.functions.Lm3Registry.invalidate(path)
-    // the KN3 registry scores the SAME artifact — keep both caches honest
-    graft.functions.Kn3Registry.invalidate(path)
+    invalidateKn(path)
   }
 
   def save(lm: UnigramLm, path: String): Unit = {

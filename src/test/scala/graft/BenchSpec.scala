@@ -80,6 +80,25 @@ class BenchSpec extends AnyFunSuite {
     assert(Bench.parseFlag("""{"dumps_timed":"yes"}""", "dumps_timed").isEmpty)
   }
 
+  test("prevMismatch: a prev recorded at the same cpus on the same " +
+      "dumps_timed form keeps the per-query gates armed") {
+    val prev = """{"metric":"total","value":1.0,"dumps_timed":false,"cpus":4,"load_scale":1.0}"""
+    assert(Bench.prevMismatch(prev, dumpsTimed = false, cpus = 4).isEmpty)
+  }
+
+  test("prevMismatch: a prev whose cpus stamp is missing or different " +
+      "disarms the per-query gates like a dumps_timed mismatch") {
+    val at32 = """{"metric":"total","value":1.0,"dumps_timed":false,"cpus":32,"load_scale":1.0}"""
+    val unstamped = """{"metric":"total","value":1.0,"dumps_timed":false,"load_scale":1.0}"""
+    assert(Bench.prevMismatch(at32, dumpsTimed = false, cpus = 4)
+      .exists(_.contains("cpus=4")))
+    assert(Bench.prevMismatch(unstamped, dumpsTimed = false, cpus = 4)
+      .exists(_.contains("cpus=4")))
+    // the form check still holds and is reported first
+    assert(Bench.prevMismatch(at32, dumpsTimed = true, cpus = 32)
+      .exists(_.contains("dumps_timed")))
+  }
+
   test("parseQueryTimes: reads the exact one-line Bench form; a " +
       "pretty-printed bench_prev silently parses empty (the documented " +
       "format trap — keep the committed file verbatim)") {

@@ -623,10 +623,11 @@ class CliSpecB extends CliSpecBase {
     import spark.implicits._
     val base = tmp()
     val docs = spark.read.parquet(s"$sfDir/documents.parquet").select("doc_id", "text")
-    val lm = graft.llm.LangModel.trainKneserNey3(
-      docs.filter(col("doc_id") < 100), "text")
+    // a legacy-format artifact: the minCount=1 saveTrigram file
+    val lm = graft.llm.LangModel.trainTrigram(
+      docs.filter(col("doc_id") < 100), "text", minCount = 1L)
     val kn3Path = base.resolve("ref_kn.lm3").toString
-    graft.llm.LangModel.saveTrigram(lm.trigram, kn3Path)
+    graft.llm.LangModel.saveTrigram(lm, kn3Path)
     // ordered prefix vs its reverse: identical unigrams, trigram
     // continuations separate them; the floor sits between THEIR scores
     val sample = docs.filter(col("doc_id") === 0).head().getString(1)

@@ -464,16 +464,16 @@ class LangModelSpec extends SparkTestBase {
   test("Kneser–Ney: count-of-counts discount; a PROPER distribution — " +
       "p(·|ctx) sums to exactly 1 over vocab ∪ OOV, seen and unseen contexts") {
     val ref = Seq("a b a c a b d c a").toDF("text")
-    val lm = LangModel.trainKneserNey(ref, "text")
+    val lm = LangModel.trainKneserNeyN(ref, "text", order = 2)
     // bigram types: (a,b)×2 (c,a)×2 (b,a) (a,c) (b,d) (d,c) →
     // n1 = 4 singletons, n2 = 2 doubles → D = 4/(4+2·2) = 0.5
-    assert(lm.discount == 0.5, s"discount: ${lm.discount}")
+    assert(lm.discount(2) == 0.5, s"discount: ${lm.discount(2)}")
     val vocab = Seq("a", "b", "c", "d")
     val outcomes = vocab :+ "zz" // zz stands in for the OOV bucket
     for (w1 <- Seq("a", "zz")) { // a seen and an unseen context
       val docs = (outcomes.zipWithIndex.map { case (w2, i) =>
         (i.toLong, s"$w1 $w2") } :+ (99L -> w1)).toDF("doc_id", "text")
-      val got = LangModel.logProbPerDocKneserNey(docs, lm, "doc_id", "text")
+      val got = LangModel.logProbPerDocKneserNeyN(docs, lm, "doc_id", "text")
         .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
       // a two-token doc averages position 0 (pcont(w1)) with the pair;
       // the single-token doc 99 isolates position 0, so the pair's
@@ -493,10 +493,10 @@ class LangModelSpec extends SparkTestBase {
       .select(col("doc_id"), col("text"))
     val ref = all.filter(col("doc_id") < 200)
     val held = all.filter(col("doc_id") >= 200 && col("doc_id") < 400)
-    val kn = LangModel.trainKneserNey(ref, "text")
+    val kn = LangModel.trainKneserNeyN(ref, "text", order = 2)
     val lap = LangModel.trainBigram(ref, "text", minCount = 1)
-    val knAvg = LangModel.logProbPerDocKneserNey(held, kn, "doc_id", "text")
-      .agg(avg("kn_logp")).head().getDouble(0)
+    val knAvg = LangModel.logProbPerDocKneserNeyN(held, kn, "doc_id", "text")
+      .agg(avg("knn_logp")).head().getDouble(0)
     val lapAvg = LangModel.logProbPerDocBigram(held, lap, "doc_id", "text")
       .agg(avg("lm2_logp")).head().getDouble(0)
     // Laplace reserves (V+1)-wide uniform mass in EVERY context; KN
@@ -510,8 +510,8 @@ class LangModelSpec extends SparkTestBase {
       (1L, "the cat sat on the mat"),
       (2L, "mat the on sat cat the")).toDF("doc_id", "text")
     val ordered = (1 to 50).map(_ => "the cat sat on the mat and the dog ran").toDF("text")
-    val knO = LangModel.trainKneserNey(ordered, "text")
-    val sc = LangModel.logProbPerDocKneserNey(probe, knO, "doc_id", "text")
+    val knO = LangModel.trainKneserNeyN(ordered, "text", order = 2)
+    val sc = LangModel.logProbPerDocKneserNeyN(probe, knO, "doc_id", "text")
       .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
     assert(sc(1L) > sc(2L) + 0.1,
       s"KN must prefer training order: ${sc(1L)} vs ${sc(2L)}")
@@ -521,18 +521,18 @@ class LangModelSpec extends SparkTestBase {
       "distribution at every backoff level — seen trigram context, " +
       "seen-middle-only, and fully unseen") {
     val ref = Seq("a b a c a b d c a").toDF("text")
-    val lm = LangModel.trainKneserNey3(ref, "text")
+    val lm = LangModel.trainKneserNeyN(ref, "text", order = 3)
     // 7 trigram types, all singletons → d3 = 7/(7+0) capped at 1;
     // continuation bigrams: (c,a)×2 and 5 singletons → d2 = 5/(5+2·1)
-    assert(lm.d3 == 1.0, s"d3: ${lm.d3}")
-    assert(lm.d2 == 5.0 / 7.0, s"d2: ${lm.d2}")
+    assert(lm.discount(3) == 1.0, s"d3: ${lm.discount(3)}")
+    assert(lm.discount(2) == 5.0 / 7.0, s"d2: ${lm.discount(2)}")
     val outcomes = Seq("a", "b", "c", "d", "zz") // zz = the OOV bucket
     for ((w1, w2) <- Seq(("a", "b"), ("zz", "a"), ("zz", "zz"))) {
       // "w1 w2 w" averages three positions; "w1 w2" isolates the first
       // two — so the third position's conditional is 3·avg3 − 2·avg2
       val docs = (outcomes.zipWithIndex.map { case (w, i) =>
         (i.toLong, s"$w1 $w2 $w") } :+ (99L -> s"$w1 $w2")).toDF("doc_id", "text")
-      val got = LangModel.logProbPerDocKneserNey3(docs, lm, "doc_id", "text")
+      val got = LangModel.logProbPerDocKneserNeyN(docs, lm, "doc_id", "text")
         .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
       val prefix = 2 * got(99L)
       val total = outcomes.indices.map { i =>
@@ -548,33 +548,35 @@ class LangModelSpec extends SparkTestBase {
     // signal; both probes are pairwise identical
     val ref = ((1 to 30).map(_ => "a b c") ++ (1 to 30).map(_ => "d b e"))
       .toDF("text")
-    val kn3 = LangModel.trainKneserNey3(ref, "text")
-    val kn2 = LangModel.trainKneserNey(ref, "text")
+    val kn3 = LangModel.trainKneserNeyN(ref, "text", order = 3)
+    val kn2 = LangModel.trainKneserNeyN(ref, "text", order = 2)
     val docs = Seq(
       (1L, "a b c"),  // trigram-consistent
       (2L, "a b e")   // every BIGRAM seen, trigram violated
     ).toDF("doc_id", "text")
-    val s3 = LangModel.logProbPerDocKneserNey3(docs, kn3, "doc_id", "text")
+    val s3 = LangModel.logProbPerDocKneserNeyN(docs, kn3, "doc_id", "text")
       .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
     assert(s3(1L) > s3(2L) + 0.1,
       s"KN3 must prefer the attested continuation: ${s3(1L)} vs ${s3(2L)}")
-    val s2 = LangModel.logProbPerDocKneserNey(docs, kn2, "doc_id", "text")
+    val s2 = LangModel.logProbPerDocKneserNeyN(docs, kn2, "doc_id", "text")
       .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
     assert(math.abs(s2(1L) - s2(2L)) < 1e-12,
       "both docs are pairwise identical to the KN bigram — order 3's whole point")
   }
 
-  test("KN3 native registry scores the saveTrigram artifact: parity with the " +
-      "composable form at the oracle rounding; foreign files rejected") {
+  test("KN3 native registry (graft_kn3_logprob) scores the order-3 artifact: " +
+      "parity with the composable form at the oracle rounding; foreign files " +
+      "rejected") {
     import graft.functions.GraftFunctions
     val all = spark.read.parquet(s"$sfDir/documents.parquet")
       .select(col("doc_id"), col("text"))
-    val kn = LangModel.trainKneserNey3(all.filter(col("doc_id") < 200), "text")
+    val ref = all.filter(col("doc_id") < 200)
+    val kn = LangModel.trainKneserNeyN(ref, "text", order = 3)
     val path = tmpLm("kn3_parity.lm3")
-    LangModel.saveTrigram(kn.trigram, path)
+    LangModel.saveNgram(kn.ngram, path)
     val held = all.filter(col("doc_id") >= 200 && col("doc_id") < 500)
-    val slow = LangModel.logProbPerDocKneserNey3(held, kn, "doc_id", "text")
-      .select(col("doc_id"), round(col("kn3_logp"), 6).as("s"))
+    val slow = LangModel.logProbPerDocKneserNeyN(held, kn, "doc_id", "text")
+      .select(col("doc_id"), round(col("knn_logp"), 6).as("s"))
     val fast = held.select(col("doc_id"),
       round(GraftFunctions.kn3LogProb(col("text"), path), 6).as("f"))
     val mism = slow.join(fast, "doc_id").filter(col("s") =!= col("f")).count()
@@ -582,7 +584,7 @@ class LangModelSpec extends SparkTestBase {
     // OOV-context, seen-middle-only, and short-doc edges agree too
     val edge = Seq((1L, "zzz qqq rrr"), (2L, "the zzz qqq"), (3L, "zzz"),
       (4L, "the of"), (5L, "zzz the of and")).toDF("doc_id", "text")
-    val se = LangModel.logProbPerDocKneserNey3(edge, kn, "doc_id", "text")
+    val se = LangModel.logProbPerDocKneserNeyN(edge, kn, "doc_id", "text")
       .collect().map(r => r.getLong(0) -> math.rint(r.getDouble(1) * 1e6)).toMap
     val fe = edge.select(col("doc_id"),
       GraftFunctions.kn3LogProb(col("text"), path))
@@ -590,31 +592,32 @@ class LangModelSpec extends SparkTestBase {
     assert(se == fe, s"edge paths must agree: $se vs $fe")
     // a bigram artifact is not a trigram artifact
     val biPath = tmpLm("kn3_notbigram.lm2")
-    LangModel.saveBigram(kn.trigram.bigram, biPath)
+    LangModel.saveNgram(LangModel.trainNgram(ref, "text", order = 2), biPath)
     val err = intercept[Exception] {
       spark.range(1).select(GraftFunctions.kn3LogProb(lit("a b c"), biPath)).head()
     }
     assert(err.getMessage != null)
   }
 
-  test("KN native registry scores the saveBigram artifact: parity with the " +
-      "composable form at the oracle rounding; foreign files rejected") {
+  test("KN native registry (graft_kn_logprob) scores the order-2 artifact: " +
+      "parity with the composable form at the oracle rounding; foreign files " +
+      "rejected") {
     import graft.functions.GraftFunctions
     val all = spark.read.parquet(s"$sfDir/documents.parquet")
       .select(col("doc_id"), col("text"))
-    val kn = LangModel.trainKneserNey(all.filter(col("doc_id") < 200), "text")
+    val kn = LangModel.trainKneserNeyN(all.filter(col("doc_id") < 200), "text", order = 2)
     val path = tmpLm("kn_parity.lm2")
-    LangModel.saveBigram(kn.bigram, path)
+    LangModel.saveNgram(kn.ngram, path)
     val held = all.filter(col("doc_id") >= 200 && col("doc_id") < 500)
-    val slow = LangModel.logProbPerDocKneserNey(held, kn, "doc_id", "text")
-      .select(col("doc_id"), round(col("kn_logp"), 6).as("s"))
+    val slow = LangModel.logProbPerDocKneserNeyN(held, kn, "doc_id", "text")
+      .select(col("doc_id"), round(col("knn_logp"), 6).as("s"))
     val fast = held.select(col("doc_id"),
       round(GraftFunctions.knLogProb(col("text"), path), 6).as("f"))
     val mism = slow.join(fast, "doc_id").filter(col("s") =!= col("f")).count()
     assert(mism == 0, s"$mism docs disagree between composable and native KN")
     // OOV context and OOV word paths agree too
     val edge = Seq((1L, "zzz qqq"), (2L, "the zzz"), (3L, "zzz")).toDF("doc_id", "text")
-    val se = LangModel.logProbPerDocKneserNey(edge, kn, "doc_id", "text")
+    val se = LangModel.logProbPerDocKneserNeyN(edge, kn, "doc_id", "text")
       .collect().map(r => r.getLong(0) -> math.rint(r.getDouble(1) * 1e6)).toMap
     val fe = edge.select(col("doc_id"),
       GraftFunctions.knLogProb(col("text"), path))
@@ -622,32 +625,70 @@ class LangModelSpec extends SparkTestBase {
     assert(se == fe, s"edge paths must agree: $se vs $fe")
     // a unigram LM file is not a KN artifact
     val uniPath = tmpLm("kn_notbigram.lm")
-    LangModel.save(kn.bigram.unigram, uniPath)
+    LangModel.save(kn.ngram.unigram, uniPath)
     val err = intercept[Exception] {
       spark.range(1).select(GraftFunctions.knLogProb(lit("a b"), uniPath)).head()
     }
     assert(err.getMessage != null)
   }
 
-  test("order-n Kneser–Ney at order 3 reproduces the dedicated KN3: same " +
-      "discounts, same per-doc scores — the recursion collapses correctly") {
+  test("legacy saveBigram / saveTrigram artifacts score through the order-n KN " +
+      "registry bit for bit like the saveNgram file of trainKneserNeyN; other " +
+      "orders rejected; rewriting a path invalidates the cache") {
+    import graft.functions.GraftFunctions
     val all = spark.read.parquet(s"$sfDir/documents.parquet")
       .select(col("doc_id"), col("text"))
     val ref = all.filter(col("doc_id") < 200)
-    val kn3 = LangModel.trainKneserNey3(ref, "text")
-    val knN = LangModel.trainKneserNeyN(ref, "text", order = 3)
-    assert(knN.discount(3) == kn3.d3 && knN.discount(2) == kn3.d2,
-      s"discounts must be identical: D3 ${knN.discount(3)} vs ${kn3.d3}, " +
-        s"D2 ${knN.discount(2)} vs ${kn3.d2}")
-    val held = all.filter(col("doc_id") >= 200 && col("doc_id") < 400)
-    val a = LangModel.logProbPerDocKneserNey3(held, kn3, "doc_id", "text")
-      .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
-    val b = LangModel.logProbPerDocKneserNeyN(held, knN, "doc_id", "text")
-      .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
-    assert(a.keySet == b.keySet)
-    val worst = a.keys.map(k => math.abs(a(k) - b(k))).max
-    assert(worst < 1e-12,
-      s"generic-at-3 must match KN3 (identical arithmetic graph), worst=$worst")
+    // 300 held docs plus the OOV-context, seen-middle-only and
+    // short-doc edges
+    val docs = all.filter(col("doc_id") >= 200 && col("doc_id") < 500)
+      .unionByName(Seq((100001L, "zzz qqq rrr"), (100002L, "the zzz qqq"),
+        (100003L, "zzz"), (100004L, "the of"), (100005L, "zzz the of and"))
+        .toDF("doc_id", "text"))
+    def bits(score: org.apache.spark.sql.Column): Map[Long, Option[Long]] =
+      docs.select(col("doc_id"), score).collect().map { r =>
+        r.getLong(0) -> (if (r.isNullAt(1)) None
+          else Some(java.lang.Double.doubleToRawLongBits(r.getDouble(1))))
+      }.toMap
+    val lm2 = tmpLm("legacy_kn.lm2"); val ng2 = tmpLm("legacy_kn_o2.lm")
+    val lm3 = tmpLm("legacy_kn3.lm3"); val ng3 = tmpLm("legacy_kn3_o3.lm")
+    LangModel.saveBigram(LangModel.trainBigram(ref, "text", 1L), lm2)
+    LangModel.saveNgram(LangModel.trainKneserNeyN(ref, "text", 2).ngram, ng2)
+    LangModel.saveTrigram(LangModel.trainTrigram(ref, "text", 1L), lm3)
+    LangModel.saveNgram(LangModel.trainKneserNeyN(ref, "text", 3).ngram, ng3)
+    val legacy2 = bits(GraftFunctions.knLogProb(col("text"), lm2))
+    assert(legacy2.size == 305)
+    assert(legacy2 == bits(GraftFunctions.knNLogProb(col("text"), ng2)),
+      "saveBigram via graft_kn_logprob must equal saveNgram via graft_knn_logprob")
+    val legacy3 = bits(GraftFunctions.kn3LogProb(col("text"), lm3))
+    assert(legacy3 == bits(GraftFunctions.knNLogProb(col("text"), ng3)),
+      "saveTrigram via graft_kn3_logprob must equal saveNgram via graft_knn_logprob")
+    assert(legacy3 != legacy2)
+    // the order-pinned names reject a file of another order, and a
+    // unigram file is no KN artifact at all
+    val uniPath = tmpLm("legacy_kn_uni.lm")
+    LangModel.save(LangModel.trainUnigram(ref, "text"), uniPath)
+    for (fn <- Seq(
+        GraftFunctions.kn3LogProb(lit("a b c"), lm2),
+        GraftFunctions.knLogProb(lit("a b c"), lm3),
+        GraftFunctions.knLogProb(lit("a b"), uniPath),
+        GraftFunctions.kn3LogProb(lit("a b c"), uniPath))) {
+      val err = intercept[Exception](spark.range(1).select(fn).head())
+      assert(err.getMessage != null)
+    }
+    // overwriting a saveTrigram path with another model changes the
+    // next score: the save dropped the registry's cached table
+    val probe = Seq((1L, "the of and to a in")).toDF("doc_id", "text")
+    def score(path: String) = probe
+      .select(GraftFunctions.kn3LogProb(col("text"), path)).head().getDouble(0)
+    val before = score(lm3)
+    val other = all.filter(col("doc_id") >= 200 && col("doc_id") < 400)
+    LangModel.saveTrigram(LangModel.trainTrigram(other, "text", 1L), lm3)
+    val ngOther = tmpLm("legacy_kn3_other.lm")
+    LangModel.saveNgram(LangModel.trainKneserNeyN(other, "text", 3).ngram, ngOther)
+    val after = score(lm3)
+    assert(after != before, "a rewritten saveTrigram file must not score from the stale cache")
+    assert(after == score(ngOther))
   }
 
   test("order-4 Kneser–Ney: per-level count-of-counts discounts; PROPER " +
@@ -679,7 +720,7 @@ class LangModelSpec extends SparkTestBase {
     val ref = ((1 to 30).map(_ => "a b c d") ++ (1 to 30).map(_ => "e b c f"))
       .toDF("text")
     val kn4 = LangModel.trainKneserNeyN(ref, "text", order = 4)
-    val kn3 = LangModel.trainKneserNey3(ref, "text")
+    val kn3 = LangModel.trainKneserNeyN(ref, "text", order = 3)
     val docs = Seq(
       (1L, "a b c d"),  // 4-gram-consistent
       (2L, "a b c f")   // every TRIGRAM seen, 4-gram violated
@@ -688,7 +729,7 @@ class LangModelSpec extends SparkTestBase {
       .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
     assert(s4(1L) > s4(2L) + 0.1,
       s"KN4 must prefer the attested continuation: ${s4(1L)} vs ${s4(2L)}")
-    val s3 = LangModel.logProbPerDocKneserNey3(docs, kn3, "doc_id", "text")
+    val s3 = LangModel.logProbPerDocKneserNeyN(docs, kn3, "doc_id", "text")
       .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
     assert(math.abs(s3(1L) - s3(2L)) < 1e-12,
       "both docs are pairwise identical to KN3 — order 4's whole point")
@@ -718,12 +759,11 @@ class LangModelSpec extends SparkTestBase {
       GraftFunctions.knNLogProb(col("text"), path))
       .collect().map(r => r.getLong(0) -> math.rint(r.getDouble(1) * 1e6)).toMap
     assert(se == fe, s"edge paths must agree: $se vs $fe")
-    // a trigram artifact is not an ngram artifact
-    val triPath = tmpLm("knn_nottrigram.lm3")
-    LangModel.saveTrigram(LangModel.trainTrigram(
-      all.filter(col("doc_id") < 50), "text", minCount = 1), triPath)
+    // a unigram LM file is not an n-gram artifact
+    val uniPath = tmpLm("knn_notngram.lm")
+    LangModel.save(LangModel.trainUnigram(all.filter(col("doc_id") < 50), "text"), uniPath)
     val err = intercept[Exception] {
-      spark.range(1).select(GraftFunctions.knNLogProb(lit("a b c d"), triPath)).head()
+      spark.range(1).select(GraftFunctions.knNLogProb(lit("a b c d"), uniPath)).head()
     }
     assert(err.getMessage != null)
   }
@@ -760,7 +800,7 @@ class LangModelSpec extends SparkTestBase {
 
   test("packed KN-n registry: flat fingerprint/float32 tables agree with " +
       "the exact-string registry at the quantization rounding, OOV edges " +
-      "included; a trigram artifact is rejected through the shared loader") {
+      "included; a unigram file is rejected through the shared loader") {
     import graft.functions.GraftFunctions
     val all = spark.read.parquet(s"$sfDir/documents.parquet")
       .select(col("doc_id"), col("text"))
@@ -800,12 +840,11 @@ class LangModelSpec extends SparkTestBase {
       .select(GraftFunctions.knNLogProbPacked(col("text"), path).as("s"))
       .collect()
     assert(nulls.forall(_.isNullAt(0)))
-    val triPath = tmpLm("knn_packed_nottrigram.lm3")
-    LangModel.saveTrigram(LangModel.trainTrigram(
-      all.filter(col("doc_id") < 50), "text", minCount = 1), triPath)
+    val uniPath = tmpLm("knn_packed_notngram.lm")
+    LangModel.save(LangModel.trainUnigram(all.filter(col("doc_id") < 50), "text"), uniPath)
     val err = intercept[Exception] {
       spark.range(1).select(
-        GraftFunctions.knNLogProbPacked(lit("a b c d"), triPath)).head()
+        GraftFunctions.knNLogProbPacked(lit("a b c d"), uniPath)).head()
     }
     assert(err.getMessage != null)
   }

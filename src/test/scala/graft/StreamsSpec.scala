@@ -181,9 +181,11 @@ class StreamsSpec extends SparkTestBase {
     import graft.llm.LangModel
     val corpus = spark.read.parquet(s"$sfDir/documents.parquet")
       .select(col("doc_id"), col("text"))
-    val lm = LangModel.trainKneserNey3(corpus.filter(col("doc_id") < 100), "text")
+    // a legacy-format artifact: the minCount=1 saveTrigram file
+    val lm = LangModel.trainTrigram(
+      corpus.filter(col("doc_id") < 100), "text", minCount = 1L)
     val lmPath = s"${java.nio.file.Files.createTempDirectory("stream_filter")}/kn.lm3"
-    LangModel.saveTrigram(lm.trigram, lmPath)
+    LangModel.saveTrigram(lm, lmPath)
     val prose = corpus.filter(col("doc_id") === 150).head().getString(1)
     val dir = s"${java.nio.file.Files.createTempDirectory("stream_filter")}/docs"
     Seq(
