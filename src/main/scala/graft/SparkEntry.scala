@@ -1287,13 +1287,14 @@ object SparkEntry {
       dumpAux(batch.select(col("doc_id"),
         Dedup.contentHash(col("text")).as("content_hash"),
         Dedup.simHash(col("text"), gramSize = 3).as("sig")), dir, "q40_batch")
-      Dedup.dropSeen(batch, "text", "doc_id", seen, sigs,
+      // survivors come back persisted (the dropSeen contract)
+      val survivors = Dedup.dropSeen(batch, "text", "doc_id", seen, sigs,
         gramSize = 3, corpusHotBuckets = Some(hot))
-        .groupBy(
+      eagerSummary(s, survivors.groupBy(
           when(col("doc_id") >= 40000, "near_echo")
             .when(col("doc_id") >= 30000, "exact_echo")
             .otherwise("fresh").as("cohort"))
-        .agg(count(lit(1)).as("n_survivors"))
+        .agg(count(lit(1)).as("n_survivors")), survivors)
     }),
 
     // ---- BPE-budget chunking under the gate: greedy-pack whitespace

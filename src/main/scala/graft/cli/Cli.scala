@@ -140,16 +140,44 @@ object Cli {
 
   /** Per-stage wall-time + row-count collector for the Curator's run
     * artifact (the Bench mem-block idiom: a production run should be
-    * diagnosable from its artifacts alone, without logs). Spark is
-    * lazy, so a stage's `sec` is the wall time spent INSIDE its block —
-    * construction plus whatever eager work (counts, persists, writes)
-    * the block performs; a lazy stage's execution cost lands in the
-    * next eager stage's timing, which is faithful to where the time is
-    * actually spent. Insertion order is preserved — the artifact reads
-    * top-to-bottom as the pipeline ran. */
+    * diagnosable from its artifacts alone, without logs). `rows` come
+    * from observations of the writing pass: a counted stage attaches a
+    * [[RowCounter]] (`Dataset.observe`) to a frame that pass reads,
+    * instead of a `count()` that re-runs the lineage above the stage,
+    * and [[report]] defers its `rows` and log line to [[resolve]], after
+    * the write. `sec` is driver wall time spent around lazy code: the
+    * time INSIDE a stage's block — plan construction plus whatever eager
+    * work (persists, writes, a library's own actions) it performs; a lazy
+    * stage's execution lands on whichever later block runs an action.
+    * Insertion order is preserved — the artifact reads top-to-bottom as
+    * the pipeline ran. */
   final class StageLog {
     private val entries = scala.collection.mutable.LinkedHashMap
       .empty[String, (Double, Option[Long])]
+    private val reports = scala.collection.mutable.ArrayBuffer.empty[() => Unit]
+    // attached counters, read by the listener on Spark's listener bus;
+    // the listener (not Spark's `Observation`, whose manager, once made,
+    // leaves the session unserializable for closures that capture it)
+    // hands each counter its values from the first action that reports
+    // them
+    private val counters = new java.util.concurrent.CopyOnWriteArrayList[RowCounter]()
+    private var listener: Option[(SparkSession, org.apache.spark.sql.util.QueryExecutionListener)] =
+      None
+
+    private[Cli] def attach(c: RowCounter, spark: SparkSession): Unit = {
+      counters.add(c)
+      if (listener.isEmpty) {
+        val l = new org.apache.spark.sql.util.QueryExecutionListener {
+          def onSuccess(f: String, qe: org.apache.spark.sql.execution.QueryExecution,
+              ns: Long): Unit =
+            counters.forEach(c => qe.observedMetrics.get(c.name).foreach(c.fill))
+          def onFailure(f: String, qe: org.apache.spark.sql.execution.QueryExecution,
+              e: Exception): Unit = ()
+        }
+        spark.listenerManager.register(l)
+        listener = Some(spark -> l)
+      }
+    }
 
     def timed[T](name: String)(body: => T): T = {
       val t0 = System.nanoTime()
@@ -168,14 +196,78 @@ object Cli {
       ()
     }
 
+    /** A new row counter, also summing each named column (0 over no rows). */
+    def counter(sums: (String, org.apache.spark.sql.Column)*): RowCounter =
+      new RowCounter(this, sums)
+
+    /** Run `body` in [[resolve]], after the pass that fills the counters
+      * it reads; reports run in the order they were made. */
+    def report(body: => Unit): Unit = reports += (() => body)
+
+    /** [[report]] that first fills `stage`'s rows from `n`. */
+    def report(stage: String, n: RowCounter)(body: => Unit): Unit =
+      report { rows(stage, n.rows); body }
+
+    /** Call once the write has returned: wait for the counters' values
+      * (Spark delivers them on its listener bus after the action; a
+      * frame no action ran never gets any, so the wait is bounded), then
+      * run the reports — one that reads a missing value logs that. */
+    def resolve(): Unit = {
+      val deadline = scala.concurrent.duration.Duration(2, "minutes").fromNow
+      counters.forEach(_.await(deadline))
+      listener.foreach { case (s, l) => s.listenerManager.unregister(l) }
+      listener = None
+      reports.foreach { r =>
+        try r() catch { case e: NoSuchElementException => log(s"stage counts: ${e.getMessage}") }
+      }
+      reports.clear()
+    }
+
     def writeJson(spark: SparkSession, path: String): Unit = {
       val body = entries.map { case (k, (sec, rows)) =>
-        f""""$k":{"sec":$sec%.3f${rows.map(r => s""","rows":$r""").getOrElse("")}}"""
+        s""""$k":{"sec":${"%.3f".formatLocal(java.util.Locale.ROOT, sec)}""" +
+          rows.map(r => s""","rows":$r""").getOrElse("") + "}"
       }.mkString("{", ",", "}")
       val p = new org.apache.hadoop.fs.Path(path)
       val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
       val out = fs.create(p, true)
       try out.write(body.getBytes("UTF-8")) finally out.close()
+    }
+  }
+
+  /** One observation from [[StageLog.counter]]: [[observe]] attaches it
+    * to the frame whose rows it counts, [[rows]] and [[apply]] read the
+    * values once [[StageLog.resolve]] has waited for them. The values
+    * are those of the first action that runs the observed frame, summed
+    * over every time that action computes it. So that action must read
+    * each row exactly once: a `limit` or `take` would fix a partial
+    * count, and a range partitioner, which samples its input in a job of
+    * its own, doubles a count it is not shielded from by a cache. */
+  final class RowCounter private[Cli] (log: StageLog,
+      sums: Seq[(String, org.apache.spark.sql.Column)]) {
+    import org.apache.spark.sql.functions.{coalesce, count, lit, sum}
+    private[Cli] val name = s"rows-${java.util.UUID.randomUUID()}"
+    private val values = scala.concurrent.Promise[org.apache.spark.sql.Row]()
+
+    def observe(df: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
+      log.attach(this, df.sparkSession)
+      df.observe(name, count(lit(1)).as("rows"),
+        sums.map { case (k, c) => coalesce(sum(c.cast("long")), lit(0L)).as(k) }: _*)
+    }
+
+    private[Cli] def fill(r: org.apache.spark.sql.Row): Unit = values.trySuccess(r)
+
+    private[Cli] def await(deadline: scala.concurrent.duration.Deadline): Unit =
+      scala.util.Try(scala.concurrent.Await.ready(values.future,
+        deadline.timeLeft.max(scala.concurrent.duration.Duration.Zero)))
+
+    def rows: Long = apply("rows")
+
+    def apply(metric: String): Long = values.future.value match {
+      case Some(scala.util.Success(r)) if r.schema != null && r.schema.fieldNames.contains(metric) =>
+        r.getAs[Long](metric)
+      case _ => throw new NoSuchElementException(
+        s"'$metric' was not observed (no action read the counted frame)")
     }
   }
 
@@ -482,7 +574,7 @@ object Scorer {
   * next increment. Alternate A/B state dirs between runs. */
 object Curator {
   def main(args: Array[String]): Unit = Cli.run("curator", args) { (conf, spark) =>
-    import org.apache.spark.sql.functions.{coalesce, col, concat, count, length, lit, row_number, size, split, sum, when, xxhash64}
+    import org.apache.spark.sql.functions.{col, concat, length, lit, row_number, size, split, when, xxhash64}
     Cli.log("loading corpus...")
     // fanned out (r15): every stage below (entity decode, normalize,
     // redact regexes, quality/gopher/c4 predicates, shingle hashing) is
@@ -511,7 +603,8 @@ object Curator {
     val raw = c.getString("domain-column") match {
       case Some(dcol) => stages.timed("domain-gate") {
         import graft.llm.DomainFilter
-        var d = rawIn
+        val nIn, n = stages.counter()
+        var d = nIn.observe(rawIn)
         c.getString("blocklist-path").foreach { bp =>
           d = DomainFilter.filterByDomains(d,
             c.getString("id-column").getOrElse("doc_id"), dcol,
@@ -522,12 +615,10 @@ object Curator {
         c.getList("blocked-tlds").filter(_.nonEmpty).foreach { tlds =>
           d = DomainFilter.filterByTlds(d, dcol, tlds)
         }
-        if (!c.getString("log-drop-counts").exists(v => !v.toBoolean)) {
-          val n = d.count()
-          stages.rows("domain-gate", n)
-          Cli.log(s"domain gate: $n of ${rawIn.count()} docs admitted")
+        stages.report("domain-gate", n) {
+          Cli.log(s"domain gate: ${n.rows} of ${nIn.rows} docs admitted")
         }
-        d
+        n.observe(d)
       }
       case None => rawIn
     }
@@ -596,7 +687,7 @@ object Curator {
         // latin-1-rendered UTF-8, looped for double encodings);
         // `mojibake-list-path` overrides with an ordered literal chain
         // when an operator needs a pinned/replayable repair set
-        rawH.withColumn(tcol, mojibakeList match {
+        rawM.withColumn(tcol, mojibakeList match {
           case Some(list) => graft.llm.TextAnalysis.normalizeText(col(tcol), list)
           case None => graft.llm.TextAnalysis.normalizeTextFull(col(tcol))
         })
@@ -931,7 +1022,8 @@ object Curator {
       case true => stages.timed("url-dedup") {
         val ucol = c.getString("url-column").get
         val prior = priorUrlDir.map(d => Cli.readStateTable(spark, d, "urls"))
-        val normed = df0.withColumn("__url_norm",
+        val nIn, n = stages.counter()
+        val normed = nIn.observe(df0).withColumn("__url_norm",
           graft.llm.DomainFilter.normalizeUrl(col(ucol)))
         val w = org.apache.spark.sql.expressions.Window
           .partitionBy(col("__url_norm")).orderBy(col(idCol))
@@ -941,11 +1033,9 @@ object Curator {
           kept = kept.join(ps.select(col("url_hash").as("__ph")),
             xxhash64(col("__url_norm")) === col("__ph"), "left_anti")
         }
-        val keptDf = kept.drop("__url_norm")
-        if (!c.getString("log-drop-counts").exists(v => !v.toBoolean)) {
-          val n = keptDf.count()
-          stages.rows("url-dedup", n)
-          Cli.log(s"url-dedup: $n of ${df0.count()} docs hold a first-seen URL" +
+        val keptDf = n.observe(kept.drop("__url_norm"))
+        stages.report("url-dedup", n) {
+          Cli.log(s"url-dedup: ${n.rows} of ${nIn.rows} docs hold a first-seen URL" +
             (if (prior.isDefined) " (accumulated evidence)" else ""))
         }
         // state = prior ∪ this batch's distinct canonical-URL hashes —
@@ -977,24 +1067,23 @@ object Curator {
       .map(d => spark.read.parquet(s"$d/linefreqs"))
     val (dfB, boilerFreqs) = c.getInt("boilerplate-min-doc-freq") match {
       case Some(mdf) => stages.timed("boilerplate") {
+        val nIn, n = stages.counter()
+        val in = nIn.observe(df0U)
         // combined evidence feeds the strip's threshold subset AND the
         // state write below — persist against the double traversal
         val freqs = graft.llm.TextAnalysis.combineLineFreqs(
           priorLineFreqs.toSeq :+
-            graft.llm.TextAnalysis.lineDocFreqs(df0U, idCol, textCol))
+            graft.llm.TextAnalysis.lineDocFreqs(in, idCol, textCol))
           .persist()
         val cleaned = graft.llm.TextAnalysis
-          .stripBoilerplateAgainst(df0U, freqs, idCol, textCol, minDocFreq = mdf)
+          .stripBoilerplateAgainst(in, freqs, idCol, textCol, minDocFreq = mdf)
           .filter(col("n_kept") > 0).drop("n_kept")
-        if (!c.getString("log-drop-counts").exists(v => !v.toBoolean)) {
-          // one extra pair of count jobs, same convention as the tiers below
-          val n = cleaned.count()
-          stages.rows("boilerplate", n)
-          Cli.log(s"boilerplate: $n of ${df0U.count()} docs " +
+        stages.report("boilerplate", n) {
+          Cli.log(s"boilerplate: ${n.rows} of ${nIn.rows} docs " +
             s"keep at least one line at min-doc-freq=$mdf" +
             (if (priorLineFreqs.isDefined) " (accumulated evidence)" else ""))
         }
-        (cleaned, Some(freqs))
+        (n.observe(cleaned), Some(freqs))
       }
       // stage off: carry prior evidence forward unchanged, so toggling
       // boilerplate off for one batch never discards accumulated state
@@ -1056,15 +1145,14 @@ object Curator {
           val cleaned = graft.llm.Dedup.dedupLinesAgainst(
             dfB, idCol, textCol, prior, minLineLen = minLen).persist()
           lineCleanedToFree = Some(cleaned)
-          val kept = cleaned
+          val st = stages.counter("touched" -> (col("n_lines_removed") > 0),
+            "lines" -> col("n_lines_removed"))
+          val kept = st.observe(cleaned)
             .filter(col("n_lines_removed") === 0 || length(col(textCol)) > 0)
             .drop("n_lines_removed")
-          if (!c.getString("log-drop-counts").exists(v => !v.toBoolean)) {
-            val stats = cleaned.agg(count(lit(1)).as("docs"),
-              sum((col("n_lines_removed") > 0).cast("long")).as("touched"),
-              sum("n_lines_removed").as("lines")).head()
-            Cli.log(s"line-dedup: ${stats.getLong(2)} duplicate lines cut from " +
-              s"${stats.getLong(1)} of ${stats.getLong(0)} docs (min-len=$minLen" +
+          stages.report {
+            Cli.log(s"line-dedup: ${st("lines")} duplicate lines cut from " +
+              s"${st("touched")} of ${st.rows} docs (min-len=$minLen" +
               (if (prior.isDefined) ", accumulated evidence" else "") + ")")
           }
           // state = prior ∪ this batch's distinct hashes — hashes of
@@ -1115,8 +1203,8 @@ object Curator {
         val prior = priorSpanDir.map(readPriorSpans)
         val priorBloom = priorSpanDir.map(d => readBytes(new Path(qual(d), "spanbloom")))
         // span removal is the one EXPENSIVE pre-state stage (a
-        // token-scale shuffle) and everything downstream — the tier
-        // counts, curation, state — re-reads its output several times:
+        // token-scale shuffle) and everything downstream — the tiers,
+        // curation, state — re-reads its output several times:
         // persist the cut corpus (released after `curated` materializes
         // below, alongside the tier caches)
         val deduped = (prior match {
@@ -1124,15 +1212,13 @@ object Curator {
             dfL, idCol, textCol, ps, n = n, bloom = priorBloom)
           case None => graft.llm.Dedup.removeDuplicateSpans(dfL, idCol, textCol, n = n)
         }).persist()
-        val kept = deduped
+        val st = stages.counter("touched" -> (col("n_removed") > 0),
+          "toks" -> col("n_removed"))
+        val kept = st.observe(deduped)
           .filter(col("n_removed") === 0 || length(col(textCol)) > 0)
-        if (!c.getString("log-drop-counts").exists(v => !v.toBoolean)) {
-          val stats = deduped.agg(
-            count(lit(1)).as("docs"),
-            sum((col("n_removed") > 0).cast("long")).as("touched"),
-            sum("n_removed").as("toks")).head()
-          Cli.log(s"span-dedup: ${stats.getLong(2)} duplicate tokens cut from " +
-            s"${stats.getLong(1)} of ${stats.getLong(0)} docs (span=$n" +
+        stages.report {
+          Cli.log(s"span-dedup: ${st("toks")} duplicate tokens cut from " +
+            s"${st("touched")} of ${st.rows} docs (span=$n" +
             (if (prior.isDefined) ", accumulated evidence" else "") + ")")
         }
         // batch evidence for the state write: hashes of the stage INPUT
@@ -1162,31 +1248,25 @@ object Curator {
         val hashes = Cli.readStateTable(spark, d, "hashes")
         val sigs = Cli.readStateTable(spark, d, "sigs")
         val hot = Some(spark.read.parquet(s"$d/hot"))
+        // per-tier observability: the corpus-near tier drops on
+        // signature-only evidence — the state keeps no corpus text to
+        // Jaccard-verify against — so an increment where that tier
+        // spikes is the signal that maxHamming/gramSize over-drop
+        val nIn, nExact, n = stages.counter()
         // curate() runs verified near-dedup on these survivors next —
         // the signature-only in-batch tier would pre-empt it with
         // unverified drops and repeat the banded self-join
-        if (c.getString("log-drop-counts").exists(v => !v.toBoolean)) {
-          (graft.llm.Dedup.dropSeen(df, textCol, idCol, hashes, sigs,
-            maxHamming = cc.simHashMaxHamming, bands = cc.simHashBands,
-            gramSize = cc.shingleSize, maxBucketSize = cc.simHashMaxBucket,
-            corpusHotBuckets = hot, inBatchNear = false), None)
-        } else {
-          // per-tier observability (default ON; log-drop-counts = false to
-          // skip the extra count jobs): the corpus-near tier drops on
-          // signature-only evidence — the state keeps no corpus text to
-          // Jaccard-verify against — so an increment where that tier
-          // spikes is the signal that maxHamming/gramSize over-drop
-          val (s, n) = graft.llm.Dedup.dropSeenCounted(df, textCol, idCol, hashes, sigs,
-            maxHamming = cc.simHashMaxHamming, bands = cc.simHashBands,
-            gramSize = cc.shingleSize, maxBucketSize = cc.simHashMaxBucket,
-            corpusHotBuckets = hot, inBatchNear = false)
-          Cli.log(s"incremental tiers: batch=${n.batchRows} rows, " +
-            s"exact tier dropped ${n.droppedExactTier} (seen in corpus or in-batch exact dup), " +
-            s"corpus-near tier dropped ${n.droppedNearTier} (signature-only, unverified), " +
-            s"${n.survivors} rows continue to curation")
-          stages.rows("incremental-text-tiers", n.survivors)
-          (s, Some(s))
+        val s = graft.llm.Dedup.dropSeen(nIn.observe(df), textCol, idCol, hashes, sigs,
+          maxHamming = cc.simHashMaxHamming, bands = cc.simHashBands,
+          gramSize = cc.shingleSize, maxBucketSize = cc.simHashMaxBucket,
+          corpusHotBuckets = hot, inBatchNear = false, observeTier = nExact.observe)
+        stages.report("incremental-text-tiers", n) {
+          Cli.log(s"incremental tiers: batch=${nIn.rows} rows, " +
+            s"exact tier dropped ${nIn.rows - nExact.rows} (seen in corpus or in-batch exact dup), " +
+            s"corpus-near tier dropped ${nExact.rows - n.rows} (signature-only, unverified), " +
+            s"${n.rows} rows continue to curation")
         }
+        (n.observe(s), Some(s))
       }
       case None => (df, None)
     }
@@ -1206,33 +1286,26 @@ object Curator {
             // forever (future runs only compare against the state)
             (Similarity.srpSignatures(batch.limit(0), idCol, e, vecSeed), None)
         }
-        if (c.getString("log-drop-counts").exists(v => !v.toBoolean)) {
-          // dropSeenVectors returns a PERSISTED materialized frame
-          val s = Similarity.dropSeenVectors(batch, corpusVecSigs, vecMinCosine,
-            idCol, e, vecBands, cc.simHashMaxBucket, vecHot, vecSeed)
-          (s, Some(s))
-        } else {
-          val (s, n) = Similarity.dropSeenVectorsCounted(batch, corpusVecSigs,
-            vecMinCosine, idCol, e, vecBands, cc.simHashMaxBucket, vecHot, vecSeed)
-          Cli.log(s"vector tiers: batch=${n.batchRows} rows, " +
-            s"corpus tier dropped ${n.droppedCorpusTier} (signature-only, cos>=$vecMinCosine), " +
-            s"in-batch tier dropped ${n.droppedInBatchTier} (cosine-verified), " +
-            s"${n.survivors} rows continue to curation")
-          stages.rows("vector-tiers", n.survivors)
-          (s, Some(s))
+        val nIn, nFresh, n = stages.counter()
+        // dropSeenVectors returns a PERSISTED materialized frame
+        val s = Similarity.dropSeenVectors(nIn.observe(batch), corpusVecSigs, vecMinCosine,
+          idCol, e, vecBands, cc.simHashMaxBucket, vecHot, vecSeed,
+          observeTier = nFresh.observe)
+        stages.report("vector-tiers", n) {
+          Cli.log(s"vector tiers: batch=${nIn.rows} rows, " +
+            s"corpus tier dropped ${nIn.rows - nFresh.rows} (signature-only, cos>=$vecMinCosine), " +
+            s"in-batch tier dropped ${nFresh.rows - n.rows} (cosine-verified), " +
+            s"${n.rows} rows continue to curation")
         }
+        (n.observe(s), Some(s))
       }
       case None => (batch, None)
     }
-    val curated = stages.timed("curate") {
-      graft.llm.Curation.curate(vecBatch, idCol, textCol, cc)
-    }
     // FIM sentinel spellings (tokenizer/export contract checks live
     // with the fim stage below; resolved here so the collision count
-    // can ride the curated-count aggregate the pipeline already pays).
-    // The FORMAT contract checks too — a degenerate sentinel (empty →
-    // contains() true on every row) must refuse BEFORE the aggregate
-    // below spends a corpus pass on it (review finding).
+    // can ride the curated count). The FORMAT contract checks too — a
+    // degenerate sentinel (empty → contains() true on every row) must
+    // refuse before any pass runs (review finding).
     val fimPre = c.getString("fim-prefix-token").getOrElse("<|fim_prefix|>")
     val fimSuf = c.getString("fim-suffix-token").getOrElse("<|fim_suffix|>")
     val fimMid = c.getString("fim-middle-token").getOrElse("<|fim_middle|>")
@@ -1245,26 +1318,22 @@ object Curator {
     // sentinel-collision observability (the protected-special sharp
     // edge): text ALREADY containing a sentinel spelling aliases the
     // control downstream — count and log, never silently. FOLDED into
-    // the curated-count action (advice: a separate whole-corpus pass
-    // for one log line is not a 100 TB shape). Counted on the CURATED
-    // frame — i.e. per document, BEFORE mixture/budget sampling and
-    // epoch repetition — so the number reads "documents in the curated
+    // the curated count (advice: a separate whole-corpus pass for one
+    // log line is not a 100 TB shape). Counted on the CURATED frame —
+    // i.e. per document, BEFORE mixture/budget sampling and epoch
+    // repetition — so the number reads "documents in the curated
     // corpus carrying a spelling" (the upstream-filtering decision it
     // informs also acts pre-sampling); it can exceed what the FIM
     // stage's own input still contains when later composition rules
     // thin the corpus, and the log says so.
-    val logDropCountsOn = !c.getString("log-drop-counts").exists(v => !v.toBoolean)
-    val (curatedN, fimSentinelCollisions) =
-      if (c.getDouble("fim-rate").isDefined && logDropCountsOn) {
-        val r = curated.agg(
-          count(lit(1)),
-          coalesce(sum(when(
-            col(textCol).contains(fimPre) || col(textCol).contains(fimSuf) ||
-              col(textCol).contains(fimMid), 1L).otherwise(0L)), lit(0L))).head()
-        (r.getLong(0), r.getLong(1))
-      } else (curated.count(), 0L)
-    stages.rows("curate", curatedN)
-    println(s"curated corpus size: $curatedN")
+    val nCurated = stages.counter(
+      (if (c.getDouble("fim-rate").isEmpty) Nil
+       else Seq("fim_collisions" -> (col(textCol).contains(fimPre) ||
+         col(textCol).contains(fimSuf) || col(textCol).contains(fimMid)))): _*)
+    stages.report("curate", nCurated)(println(s"curated corpus size: ${nCurated.rows}"))
+    val curated = stages.timed("curate") {
+      graft.llm.Curation.curate(vecBatch, idCol, textCol, cc, observe = nCurated.observe)
+    }
     batchToFree.foreach(_.unpersist()) // curated cache is materialized
     df0ToFree.foreach(_._2.unpersist()) // span-cut corpus no longer re-read
     vecToFree.foreach(_.unpersist())
@@ -1324,34 +1393,39 @@ object Curator {
     // approx-percentile thresholds broadcast into a scan filter.
     // Downstream selection like mixture/chunking: the dedup state still
     // records the full curated corpus.
-    val (quantiled, quantToFree) = c.getDouble("quality-quantile") match {
+    //
+    // The counted selection stages below persist their output with the
+    // counter inside the cache: a range partitioner downstream (the
+    // export shuffle, a range-by or zorder-by target) samples its input
+    // in a job of its own, and would double an uncached count.
+    val countedToFree = scala.collection.mutable.ArrayBuffer
+      .empty[org.apache.spark.sql.DataFrame]
+    def counted(n: Cli.RowCounter, df: org.apache.spark.sql.DataFrame) = {
+      val p = n.observe(df).persist()
+      countedToFree += p
+      p
+    }
+    val (quantiled, nQuantiled) = c.getDouble("quality-quantile") match {
       case Some(frac) => stages.timed("quality-quantile") {
         val q = graft.llm.Curation.keepTopQuantile(curatedTok,
           c.getString("quantile-group-column").getOrElse("lang_id"),
           c.getString("quantile-score-column").getOrElse("quality"), frac,
           accuracy = c.getInt("quantile-accuracy").getOrElse(10000))
-        if (c.getString("log-drop-counts").exists(v => !v.toBoolean)) (q, None)
-        else {
-          // persist BEFORE counting — this frame is read again by the
-          // decontamination log and the target write, and each would
-          // otherwise re-run the threshold aggregate + broadcast join
-          // (curated itself is persisted, so ITS count is free)
-          val p = q.persist()
-          val np = p.count()
-          stages.rows("quality-quantile", np)
-          Cli.log(s"quality-quantile: $np of ${curated.count()} " +
+        val n = stages.counter()
+        stages.report("quality-quantile", n) {
+          Cli.log(s"quality-quantile: ${n.rows} of ${nCurated.rows} " +
             s"survive the top-$frac per-group cut")
-          (p, Some(p))
         }
+        (counted(n, q), n)
       }
-      case None => (curatedTok, None)
+      case None => (curatedTok, nCurated)
     }
     // optional benchmark decontamination (train/test-overlap filter) on
     // the curated survivors: docs sharing >= min-hits distinct n-grams
     // with ANY doc of the benchmark set are dropped from the training
     // OUTPUT (the dedup state still records them as curated — by
     // design, matching the mixture/chunking exclusion rule below)
-    val (decontaminated, decontToFree) = c.getString("benchmark-dir") match {
+    val decontaminated = c.getString("benchmark-dir") match {
       case Some(bdir) => stages.timed("decontaminate") {
         val bench = graft.sources.DataIO.read(spark,
           graft.conf.GraftConfig.parse(
@@ -1375,20 +1449,14 @@ object Curator {
             idCol, textCol, c.getString("benchmark-text-column").getOrElse(textCol),
             maxHamming = cc.simHashMaxHamming, bands = cc.simHashBands,
             shingleSize = cc.shingleSize, maxBucketSize = cc.simHashMaxBucket)
-        if (c.getString("log-drop-counts").exists(v => !v.toBoolean)) (out, None)
-        else {
-          // persist BEFORE counting: the log count and the downstream
-          // target write must not each re-run the corpus-side gram scan
-          // (quantiled is persisted-or-curated, so its count is cheap)
-          val p = out.persist()
-          val np = p.count()
-          stages.rows("decontaminate", np)
-          Cli.log(s"decontamination: $np of ${quantiled.count()} survive " +
+        val n = stages.counter()
+        stages.report("decontaminate", n) {
+          Cli.log(s"decontamination: ${n.rows} of ${nQuantiled.rows} survive " +
             s"the ${c.getInt("contamination-ngram").getOrElse(8)}-gram benchmark check")
-          (p, Some(p))
         }
+        counted(n, out)
       }
-      case None => (quantiled, None)
+      case None => quantiled
     }
     // optional CCNet perplexity bucketing (Wenzek et al. 2019) on the
     // decontaminated survivors: score with the saved unigram LM
@@ -1436,13 +1504,12 @@ object Curator {
           scored, "__ppl_logp", Seq(gcol), headFrac = hf, middleFrac = mf)
           .filter(col("ppl_bucket").isin(keep: _*))
           .drop("__ppl_logp")
-        if (!c.getString("log-drop-counts").exists(v => !v.toBoolean)) {
-          val n = b.count()
-          stages.rows("ppl-buckets", n)
-          Cli.log(s"ppl buckets: $n docs kept in ${keep.mkString("+")} " +
+        val n = stages.counter()
+        stages.report("ppl-buckets", n) {
+          Cli.log(s"ppl buckets: ${n.rows} docs kept in ${keep.mkString("+")} " +
             s"(group=$gcol, head=$hf, middle=$mf)")
         }
-        b
+        counted(n, b)
       }
       case None => decontaminated
     }
@@ -1654,13 +1721,16 @@ object Curator {
     val fimmed = c.getDouble("fim-rate") match {
       case Some(rate) => stages.timed("fim") {
         val tcol = if (out.columns.contains("chunk_text")) "chunk_text" else textCol
-        // the collision count rode the curated-count aggregate above —
-        // here it only logs
-        if (fimSentinelCollisions > 0) Cli.log(
-          s"fim: $fimSentinelCollisions curated documents (counted before " +
-            "any mixture/budget sampling or epoch repetition) contain a " +
-            "sentinel spelling — in-text occurrences alias the control " +
-            "tokens (filter or rewrite upstream if that is not intended)")
+        // the collision count rides the curated count above — here it
+        // only logs
+        stages.report {
+          val k = nCurated("fim_collisions")
+          if (k > 0) Cli.log(
+            s"fim: $k curated documents (counted before " +
+              "any mixture/budget sampling or epoch repetition) contain a " +
+              "sentinel spelling — in-text occurrences alias the control " +
+              "tokens (filter or rewrite upstream if that is not intended)")
+        }
         var rowId =
           if (out.columns.contains("chunk_text"))
             concat(col(idCol).cast("string"), lit(":"), col("chunk_id"))
@@ -1916,6 +1986,8 @@ object Curator {
     stages.timed("target-write") {
       graft.sources.DataIO.write(emitted, conf.at("target"))
     }
+    // the write ran every counted stage: fill their rows, print their logs
+    stages.resolve()
     // optional data card: the per-group corpus report over the CURATED
     // corpus (pre-mixture/chunking — the release-documentation view of
     // what survived curation), written as one small parquet next to the
@@ -2253,8 +2325,7 @@ object Curator {
       Cli.log(s"stage log written to $p")
     }
     curated.unpersist()
-    quantToFree.foreach(_.unpersist())
-    decontToFree.foreach(_.unpersist())
+    countedToFree.foreach(_.unpersist())
     cardState.foreach(_._2.unpersist())
     benchHits.foreach(_._2.unpersist())
     freqState.foreach(_.unpersist())
@@ -2772,7 +2843,7 @@ object Streamer {
     * batch Curator (a stream-side Hamming tier would need stateful
     * band aggregation); this mode closes that gap with `foreachBatch`:
     * a micro-batch IS a static frame, so the batch engine's three
-    * tiers ([[graft.llm.Dedup.dropSeenCounted]] — exact-vs-seen +
+    * tiers ([[graft.llm.Dedup.dropSeen]] — exact-vs-seen +
     * in-batch exact, in-batch near-dup keep-lower-id, near-vs-corpus)
     * run with EXACTLY the batch semantics, and the survivors'
     * hash/signature state accretes between micro-batches.
@@ -2804,7 +2875,7 @@ object Streamer {
     *
     * `embedding-column` adds the VECTOR tiers on the text-tier
     * survivors (the Curator's composition —
-    * [[graft.llm.Similarity.dropSeenVectorsCounted]]: SRP-vs-corpus
+    * [[graft.llm.Similarity.dropSeenVectors]]: SRP-vs-corpus
     * signature drop + cosine-verified in-batch keep-lower-id), with
     * `vecsigs`/`vechotcounts` accreting through the identical parts
     * protocol and the SRP seed/bands recorded in the marker. A
@@ -2945,7 +3016,6 @@ object Streamer {
     def seedEntries(table: String): Seq[String] = seedDir.toSeq.flatMap { d =>
       Cli.stateTableParts(spark, d, table).getOrElse(Seq(s"$d/$table"))
     }
-    val logCounts = c.getBoolean("log-drop-counts").getOrElse(true)
     val rotateAfter = c.getInt("rotate-after-parts")
     rotateAfter.foreach(n => require(n > 0,
       s"streaming.rotate-after-parts must be positive, got $n"))
@@ -2998,9 +3068,13 @@ object Streamer {
             .reduceOption(_.unionByName(_))
             .getOrElse(Dedup.simHashSignatures(batch.limit(0), idCol, textCol, gramSize))
           val countParts = countPartsBefore("hotcounts")
-          val (textSurvivors, n) = Dedup.dropSeenCounted(batch, textCol, idCol,
+          // per-tier counts ride the passes below, read after the commit
+          val counts = new Cli.StageLog
+          val nBatch, nExact, nText = counts.counter()
+          val textSurvivors = Dedup.dropSeen(nBatch.observe(batch), textCol, idCol,
             seenHashes, corpusSigs, maxHamming, bands, gramSize, maxBucket,
-            hotOf(countParts))
+            hotOf(countParts), observeTier = nExact.observe)
+          val textOut = nText.observe(textSurvivors)
           // vector tiers on the text-tier survivors (the Curator's
           // composition): SRP-vs-corpus signature drop + cosine-
           // verified in-batch drop, against seed ∪ accreted vecsigs
@@ -3012,13 +3086,16 @@ object Streamer {
               .reduceOption(_.unionByName(_))
               .getOrElse(graft.llm.Similarity.srpSignatures(
                 batch.limit(0), idCol, e, vecSeed))
-            graft.llm.Similarity.dropSeenVectorsCounted(textSurvivors,
+            val nFresh, nVec = counts.counter()
+            (graft.llm.Similarity.dropSeenVectors(textOut,
               corpusVecSigs, vecMinCos, idCol, e, vecBands, maxBucket,
-              hotOf(vecCountParts), vecSeed)
+              hotOf(vecCountParts), vecSeed, observeTier = nFresh.observe),
+              nFresh, nVec)
           }
           val survivors = vecResult.map(_._1).getOrElse(textSurvivors)
           try {
-            survivors.write.mode("overwrite").parquet(s"$targetDir/batch-$batchId")
+            vecResult.map { case (v, _, nVec) => nVec.observe(v) }.getOrElse(textOut)
+              .write.mode("overwrite").parquet(s"$targetDir/batch-$batchId")
             survivors
               .select(Dedup.contentHash(col(textCol)).as("content_hash"))
               .write.mode("overwrite").parquet(s"$root/hashes/part-$idx")
@@ -3064,18 +3141,19 @@ object Streamer {
                   .getOrElse(""))
                 .getBytes("UTF-8"))
             finally marker.close()
-            if (logCounts) {
-              val vecNote = vecResult.map { case (_, v) =>
-                s", vector tiers dropped ${v.droppedCorpusTier} vs-corpus + " +
-                  s"${v.droppedInBatchTier} in-batch"
+            counts.report {
+              val vecNote = vecResult.map { case (_, nFresh, nVec) =>
+                s", vector tiers dropped ${nText.rows - nFresh.rows} vs-corpus + " +
+                  s"${nFresh.rows - nVec.rows} in-batch"
               }.getOrElse("")
-              val kept = vecResult.map(_._2.survivors).getOrElse(n.survivors)
-              Cli.log(s"near-dedup-cluster batch $batchId: ${n.batchRows} rows, " +
-                s"exact tier dropped ${n.droppedExactTier}, " +
-                s"near tiers dropped ${n.droppedNearTier} " +
+              val kept = vecResult.map(_._3.rows).getOrElse(nText.rows)
+              Cli.log(s"near-dedup-cluster batch $batchId: ${nBatch.rows} rows, " +
+                s"exact tier dropped ${nBatch.rows - nExact.rows}, " +
+                s"near tiers dropped ${nExact.rows - nText.rows} " +
                 s"(in-batch keep-lower-id + vs-corpus)$vecNote, " +
                 s"$kept survivors -> $targetDir/batch-$batchId")
             }
+            counts.resolve()
           } finally {
             survivors.unpersist()
             if (vecResult.isDefined) textSurvivors.unpersist()
@@ -3236,7 +3314,6 @@ object Streamer {
     def seedEntries(table: String): Seq[String] = seedDir.toSeq.flatMap { d =>
       Cli.stateTableParts(spark, d, table).getOrElse(Seq(s"$d/$table"))
     }
-    val logCounts = c.getBoolean("log-drop-counts").getOrElse(true)
     val rotateAfter = c.getInt("rotate-after-parts")
     rotateAfter.foreach(n => require(n > 0,
       s"streaming.rotate-after-parts must be positive, got $n"))
@@ -3283,7 +3360,7 @@ object Streamer {
           // already reads (near-free) — the accreted state's size is
           // what saturates a too-narrow geometry, and it must never
           // do so silently again (the r13 dct lesson)
-          if (logCounts) mergedCounts.foreach { mc =>
+          mergedCounts.foreach { mc =>
             val sat = Dedup.guardSaturation(mc, maxBucket)
             if (sat.hotBuckets > 0) Cli.log(
               f"corpus hot-bucket guard: ${sat.hotBuckets}/${sat.occupiedBuckets} " +
@@ -3335,14 +3412,12 @@ object Streamer {
                 spark.read.parquet((countParts :+ s"$root/hotcounts/part-$idx"): _*)),
               maxBucket)
               .write.mode("overwrite").parquet(s"$root/hot")
-            if (logCounts) {
-              val rows = batch.count()
-              val kept = survivors.count()
-              Cli.log(s"media-near-dedup-cluster batch $batchId ($hashModality): " +
-                s"$rows assets, dropped ${rows - kept} " +
-                s"(vs-corpus + in-batch keep-lower-id), " +
-                s"$kept survivors -> $targetDir/batch-$batchId")
-            }
+            val rows = batch.count()
+            val kept = survivors.count()
+            Cli.log(s"media-near-dedup-cluster batch $batchId ($hashModality): " +
+              s"$rows assets, dropped ${rows - kept} " +
+              s"(vs-corpus + in-batch keep-lower-id), " +
+              s"$kept survivors -> $targetDir/batch-$batchId")
           } finally {
             survivors.unpersist(); dropIds.unpersist(); seen.unpersist(); ()
           }
@@ -4754,14 +4829,13 @@ object MediaDedup {
       // run, placed AFTER every plan-time misconfig require above so a
       // bad config still refuses before paying a decode pass; WARN when
       // the guard stops being a skew valve and starts being the whole
-      // join. log-drop-counts = false opts out.
+      // join.
       // the wide lineage's bucket counter — every state/guard count in
       // this run must band the way the join bands
       def countsOf(sigs: org.apache.spark.sql.DataFrame) =
         if (imageWide) Dedup.wideBucketCounts(sigs, bands, 256)
         else Dedup.bucketCounts(sigs, bands)
-      if (!c.getString("log-drop-counts").exists(v => !v.toBoolean) &&
-          maxBucket > 0) {
+      if (maxBucket > 0) {
         val sat = Dedup.guardSaturation(
           countsOf(batchSigs.select(col("id"), col("sig"))),
           maxBucket)

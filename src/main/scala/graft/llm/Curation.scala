@@ -198,12 +198,15 @@ object Curation {
 
   /** Stages 1-4. EAGER: materializes (and returns) a persisted survivor
     * frame — the caller owns the handle and should `unpersist()` it when
-    * done; the intermediate dedup cache is released before returning. */
+    * done; the intermediate dedup cache is released before returning.
+    * `observe` wraps the survivors before they are cached — pass a
+    * `Dataset.observe` to count them in the materializing pass. */
   def curate(
       docs: DataFrame,
       idCol: String,
       textCol: String,
-      conf: Config = Config()): DataFrame = {
+      conf: Config = Config(),
+      observe: DataFrame => DataFrame = identity): DataFrame = {
     require(Set("simhash", "minhash").contains(conf.nearDupStrategy),
       s"unknown nearDupStrategy: ${conf.nearDupStrategy}") // before any work/persist
     require(Set("min-id", "best-quality").contains(conf.keepPolicy),
@@ -360,8 +363,8 @@ object Curation {
                 .select(col("id").as(idCol))
           }
         } else verified.select(col("id2").as(idCol)).distinct()
-      val result = exact.join(dropIds, Seq(idCol), "left_anti")
-        .drop("__shingles")
+      val result = observe(exact.join(dropIds, Seq(idCol), "left_anti")
+        .drop("__shingles"))
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       // materialize the result, then release the intermediate — the
       // caller owns (and should unpersist) the returned frame

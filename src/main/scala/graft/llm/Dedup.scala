@@ -736,11 +736,19 @@ object Dedup {
     * Signature-tier only: compose with [[verifyPairs]]/[[Curation]] when
     * Jaccard verification of the drops is required. `gramSize` MUST
     * match the one `corpusSigs` was persisted with (see
-    * [[simHashNearDupsAgainst]]). */
-  /** `inBatchNear = false` skips the in-batch near tier — use when a
+    * [[simHashNearDupsAgainst]]).
+    *
+    * `inBatchNear = false` skips the in-batch near tier — use when a
     * verified near-dedup stage (e.g. [[Curation.curate]]) runs on the
     * survivors right after, which would otherwise repeat the banded
-    * self-join WITHOUT this tier's unverified signature-only drops. */
+    * self-join WITHOUT this tier's unverified signature-only drops.
+    *
+    * `observeTier` wraps the exact tier's survivors: pass a
+    * `Dataset.observe` to count the tier boundary.
+    *
+    * EAGER, like [[Similarity.dropSeenVectors]]: returns a PERSISTED,
+    * materialized frame (the caller unpersists it); the exact tier,
+    * which the near tiers read twice, stays cached until then. */
   def dropSeen(
       batch: DataFrame,
       textCol: String,
@@ -752,42 +760,14 @@ object Dedup {
       gramSize: Int = 1,
       maxBucketSize: Int = 10000,
       corpusHotBuckets: Option[DataFrame] = None,
-      inBatchNear: Boolean = true): DataFrame =
-    nearTiers(dropSeenExact(batch, textCol, idCol, seenHashes), textCol, idCol,
-      corpusSigs, maxHamming, bands, gramSize, maxBucketSize, corpusHotBuckets, inBatchNear)
-
-  /** Per-tier row counts from [[dropSeenCounted]]. The near tier drops on
-    * signature-only evidence (no Jaccard verification against corpus
-    * text, which the state deliberately does not retain) — these counts
-    * are the observability hook that makes silent over-dropping by a
-    * too-loose `maxHamming`/`gramSize` visible per increment. */
-  case class DropSeenCounts(batchRows: Long, afterExactTier: Long, survivors: Long) {
-    def droppedExactTier: Long = batchRows - afterExactTier
-    def droppedNearTier: Long = afterExactTier - survivors
-  }
-
-  /** [[dropSeen]] plus [[DropSeenCounts]]: costs two extra count jobs and
-    * caches the exact-tier survivors (dropping the cache once the
-    * returned frame — itself persisted — is materialized by the final
-    * count). Caller unpersists the returned frame when done with it. */
-  def dropSeenCounted(
-      batch: DataFrame,
-      textCol: String,
-      idCol: String,
-      seenHashes: DataFrame,
-      corpusSigs: DataFrame,
-      maxHamming: Int = 3,
-      bands: Int = 4,
-      gramSize: Int = 1,
-      maxBucketSize: Int = 10000,
-      corpusHotBuckets: Option[DataFrame] = None,
-      inBatchNear: Boolean = true): (DataFrame, DropSeenCounts) = {
-    val exact = dropSeenExact(batch, textCol, idCol, seenHashes).persist()
+      inBatchNear: Boolean = true,
+      observeTier: DataFrame => DataFrame = identity): DataFrame = {
+    val exact = observeTier(dropSeenExact(batch, textCol, idCol, seenHashes)).persist()
     val survivors = nearTiers(exact, textCol, idCol, corpusSigs,
       maxHamming, bands, gramSize, maxBucketSize, corpusHotBuckets, inBatchNear).persist()
-    val counts = DropSeenCounts(batch.count(), exact.count(), survivors.count())
+    survivors.count()
     exact.unpersist() // survivors is materialized; exact no longer feeds anything
-    (survivors, counts)
+    survivors
   }
 
   private def nearTiers(

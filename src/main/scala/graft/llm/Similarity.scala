@@ -730,7 +730,9 @@ object Similarity {
     * drop in-batch near-dups (keep the lower id per pair) — the vector
     * counterpart of [[Dedup.dropSeen]], state = 8 bytes per corpus
     * vector. Append [[srpSignatures]] of the survivors to the state for
-    * the next increment (same seed!). */
+    * the next increment (same seed!). `observeTier` wraps the corpus
+    * tier's survivors: pass a `Dataset.observe` to count the tier
+    * boundary. */
   def dropSeenVectors(
       batch: DataFrame,
       corpusSigs: DataFrame,
@@ -741,7 +743,8 @@ object Similarity {
       maxBucketSize: Int = 10000,
       corpusHotBuckets: Option[DataFrame] = None,
       seed: Long = 4233L,
-      inBatchNear: Boolean = true): DataFrame = {
+      inBatchNear: Boolean = true,
+      observeTier: DataFrame => DataFrame = identity): DataFrame = {
     val batchSigs = srpSignatures(batch, idCol, vecCol, seed)
     // `seen` is a tiny id frame read by BOTH the survivor anti-join and
     // the in-batch tier's signature anti-join (the R19 cache-before-
@@ -751,7 +754,7 @@ object Similarity {
       maxBucketSize, corpusHotBuckets)
       .select(col("batch_id").as(idCol)).distinct()
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val fresh = batch.join(seen, Seq(idCol), "left_anti")
+    val fresh = observeTier(batch.join(seen, Seq(idCol), "left_anti"))
     val out = if (!inBatchNear) fresh
       else inBatchVectorTier(fresh, batchSigs, seen, minCosine, idCol, vecCol,
         bands, maxBucketSize)
@@ -791,43 +794,6 @@ object Similarity {
       .filter(cosine(col("__v1"), col("__v2")) >= minCosine)
       .select(col("corpus_id").as(idCol)).distinct()
     fresh.join(drops, Seq(idCol), "left_anti")
-  }
-
-  /** Per-tier row counts from [[dropSeenVectorsCounted]] — the vector
-    * analog of [[Dedup.DropSeenCounts]]. The corpus tier drops on
-    * signature-only evidence (the state keeps 8-byte signatures, not
-    * vectors — see [[srpNearDupsAgainst]] for why that is safe); these
-    * counts are the per-increment observability hook that makes a
-    * mis-seeded or over-loose configuration visible. */
-  case class VectorDropCounts(batchRows: Long, afterCorpusTier: Long, survivors: Long) {
-    def droppedCorpusTier: Long = batchRows - afterCorpusTier
-    def droppedInBatchTier: Long = afterCorpusTier - survivors
-  }
-
-  /** [[dropSeenVectors]] plus [[VectorDropCounts]]: costs two extra
-    * count jobs and caches the corpus-tier survivors (dropped once the
-    * returned frame — itself persisted — is materialized by the final
-    * count). Caller unpersists the returned frame when done. */
-  def dropSeenVectorsCounted(
-      batch: DataFrame,
-      corpusSigs: DataFrame,
-      minCosine: Double = 0.99,
-      idCol: String = "vec_id",
-      vecCol: String = "embedding",
-      bands: Int = 4,
-      maxBucketSize: Int = 10000,
-      corpusHotBuckets: Option[DataFrame] = None,
-      seed: Long = 4233L): (DataFrame, VectorDropCounts) = {
-    val batchSigs = srpSignatures(batch, idCol, vecCol, seed)
-    val seen = srpNearDupsAgainst(batchSigs, corpusSigs, minCosine, bands,
-      maxBucketSize, corpusHotBuckets)
-      .select(col("batch_id").as(idCol)).distinct()
-    val fresh = batch.join(seen, Seq(idCol), "left_anti").persist()
-    val survivors = inBatchVectorTier(fresh, batchSigs, seen, minCosine,
-      idCol, vecCol, bands, maxBucketSize).persist()
-    val counts = VectorDropCounts(batch.count(), fresh.count(), survivors.count())
-    fresh.unpersist() // survivors is materialized; fresh no longer feeds anything
-    (survivors, counts)
   }
 
   /** Near-duplicate vector pairs via SRP signatures + the SAME banded

@@ -890,6 +890,266 @@ class CliSpec extends CliSpecBase {
     // run order is preserved: the gate precedes the write
     assert(json.indexOf("domain-gate") < json.indexOf("target-write"))
   }
+
+  test("stage log: seconds are written with a '.' under a comma-decimal " +
+      "default locale, so the artifact stays valid JSON") {
+    val path = tmp().resolve("stages.json").toString
+    val log = new Cli.StageLog
+    log.timed("curate")(Thread.sleep(5))
+    log.rows("curate", 3L)
+    val saved = java.util.Locale.getDefault
+    java.util.Locale.setDefault(java.util.Locale.GERMANY)
+    try log.writeJson(spark, path)
+    finally java.util.Locale.setDefault(saved)
+    val node = new com.fasterxml.jackson.databind.ObjectMapper()
+      .readTree(new java.io.File(path)).get("curate")
+    assert(node.get("sec").isNumber && node.get("sec").asDouble() > 0.0, node.toString)
+    assert(node.get("rows").asLong() == 3L, node.toString)
+  }
+
+  /** `stage -> rows` for every entry of a stage-log artifact, `None`
+    * for an entry without a row count. */
+  private def stageRows(path: String): Seq[(String, Option[Long])] = {
+    val json = new String(java.nio.file.Files.readAllBytes(
+      java.nio.file.Paths.get(path)), "UTF-8")
+    """"([a-z-]+)":\{"sec":[0-9.]+(?:,"rows":([0-9]+))?\}""".r
+      .findAllMatchIn(json).map(m => m.group(1) -> Option(m.group(2)).map(_.toLong))
+      .toSeq
+  }
+
+  /** Run the Curator on `conf`, returning what it printed. */
+  private def curatorOut(conf: String): String = {
+    val buf = new java.io.ByteArrayOutputStream()
+    try Console.withOut(new java.io.PrintStream(buf, true, "UTF-8")) {
+      graft.cli.Curator.main(Array("--conf", conf))
+    } finally print(buf.toString("UTF-8"))
+    buf.toString("UTF-8")
+  }
+
+  test("curator funnel: every counted stage's rows and logged figures equal " +
+      "an independent count of that stage's output") {
+    import org.apache.spark.sql.DataFrame
+    import org.apache.spark.sql.functions._
+    import spark.implicits._
+    import graft.llm.{Curation, Dedup, DomainFilter, Similarity, TextAnalysis}
+    // Five runs: the gates, the line and span cuts, the selection
+    // stages, then a seed batch and a second batch against its state for
+    // the incremental tiers. (One run with every stage on builds a
+    // logical plan the analyzer cannot hold in a test heap.)
+    val base = tmp()
+    val docs = spark.read.parquet(s"$sfDir/documents.parquet")
+      .select("doc_id", "text", "source")
+    val vecs = spark.read.parquet(s"$sfDir/embeddings.parquet")
+      .select(col("vec_id"), col("embedding"))
+    val texts = docs.select("doc_id", "text").as[(Long, String)].collect().toMap
+    val boiler = "Subscribe to the weekly newsletter today"
+    val span = texts(32L).split(" ").take(25).mkString(" ")
+    // docs 0..59, each text-rewriting stage with something planted to drop
+    val in1 = base.resolve("fin1").toString
+    (0L until 60L).map { i =>
+      val url =
+        if (i < 4) s"https://blocked.example.net/$i" // domain gate
+        else if (i >= 56) s"https://ok.example.org/${i - 4}" // url-dedup: copies of 52..55
+        else s"https://ok.example.org/$i"
+      val text = i match {
+        case 26L => boiler // nothing left once the boilerplate line goes
+        case 30L => texts(30L) + "\n" + texts(29L) // one duplicate line cut
+        case 31L => texts(29L) // every line a duplicate
+        case 33L => texts(33L) + " " + span // one duplicate span cut
+        case 34L => span // every token in a duplicate span
+        case _ if i >= 4 && i < 26 => texts(i) + "\n" + boiler
+        case _ => texts(i)
+      }
+      (i, text, url)
+    }.toDF("doc_id", "text", "url").join(docs.select("doc_id", "source"), "doc_id")
+      .write.parquet(in1)
+    def run(name: String, in: String, stages: String): (String, String, Seq[(String, Long)]) = {
+      val out = base.resolve(s"fout_$name").toString
+      val log = base.resolve(s"fstages_$name.json").toString
+      val printed = curatorOut(write(base.resolve(s"funnel_$name.conf"),
+        s"""source { storage-type = local, dataset-dir = "$in" }
+           |target { storage-type = local, dataset-dir = "$out", dataset-store-format = parquet, write-mode = overwrite }
+           |curation {
+           |  min-quality = 0.0
+           |  stage-log-path = "$log"
+           |$stages
+           |}
+           |""".stripMargin))
+      (out, printed, stageRows(log).collect { case (k, Some(r)) => k -> r })
+    }
+    def expectLines(printed: String, lines: String*): Unit =
+      lines.foreach(l => assert(printed.contains(l), s"missing '$l' in:\n$printed"))
+    val cc = Curation.Config(minQuality = 0.0)
+    val cached = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
+    def step(df: DataFrame) = { cached += df.cache(); df }
+
+    // run 1: the gates
+    val bl = write(base.resolve("fblock.txt"), "blocked.example.net\n")
+    val (_, printed1, rows1) = run("gates", in1,
+      s"""  domain-column = url
+         |  blocklist-path = "$bl"
+         |  dedup-urls = true
+         |  url-column = url
+         |  boilerplate-min-doc-freq = 10""".stripMargin)
+    val src1 = spark.read.parquet(in1)
+    val gated = step(DomainFilter.filterByDomains(src1, "doc_id", "url",
+      DomainFilter.loadDomainList(spark, bl)))
+    val firstSeen = gated.groupBy(DomainFilter.normalizeUrl(col("url")))
+      .agg(min("doc_id").as("doc_id")).select("doc_id")
+    val urlKept = step(gated.join(firstSeen, "doc_id"))
+    val unBoiled = step(TextAnalysis.stripBoilerplateAgainst(urlKept,
+      TextAnalysis.combineLineFreqs(Seq(TextAnalysis.lineDocFreqs(urlKept, "doc_id", "text"))),
+      "doc_id", "text", minDocFreq = 10).filter(col("n_kept") > 0).drop("n_kept"))
+    val n1 = Map("src" -> src1.count(), "domain-gate" -> gated.count(),
+      "url-dedup" -> urlKept.count(), "boilerplate" -> unBoiled.count(),
+      "curate" -> step(Curation.curate(unBoiled, "doc_id", "text", cc)).count())
+    // every planted drop happened, so each stage is exercised
+    assert(n1("src") == 60 && n1("domain-gate") == 56 && n1("url-dedup") == 52 &&
+      n1("boilerplate") == 51, s"planted drops: $n1")
+    assert(rows1 == Seq("domain-gate", "url-dedup", "boilerplate", "curate").map(k => k -> n1(k)))
+    expectLines(printed1,
+      s"domain gate: ${n1("domain-gate")} of ${n1("src")} docs admitted",
+      s"url-dedup: ${n1("url-dedup")} of ${n1("domain-gate")} docs hold a first-seen URL",
+      s"boilerplate: ${n1("boilerplate")} of ${n1("url-dedup")} docs keep at least one line",
+      s"curated corpus size: ${n1("curate")}")
+    cached.foreach(_.unpersist())
+
+    // run 2: the line and span cuts
+    val (_, printed2, rows2) = run("cuts", in1,
+      s"""  dedup-lines = true
+         |  span-dedup-tokens = 20""".stripMargin)
+    val lineCut = step(Dedup.dedupLinesAgainst(src1, "doc_id", "text", None, minLineLen = 15))
+    val spanCut = step(Dedup.removeDuplicateSpans(
+      lineCut.filter(col("n_lines_removed") === 0 || length(col("text")) > 0)
+        .drop("n_lines_removed"), "doc_id", "text", n = 20))
+    val curatedCuts = step(Curation.curate(
+      spanCut.filter(col("n_removed") === 0 || length(col("text")) > 0).drop("n_removed"),
+      "doc_id", "text", cc)).count()
+    def sums(df: DataFrame, c: String): (Long, Long, Long) = {
+      val r = df.agg(count(lit(1)), sum((col(c) > 0).cast("long")), sum(col(c).cast("long")))
+        .head()
+      (r.getLong(0), r.getLong(1), r.getLong(2))
+    }
+    val (lineDocs, lineTouched, lines) = sums(lineCut, "n_lines_removed")
+    val (spanDocs, spanTouched, toks) = sums(spanCut, "n_removed")
+    assert(lineTouched >= 2 && spanTouched >= 2, s"planted cuts: $lineTouched, $spanTouched")
+    assert(rows2 == Seq("curate" -> curatedCuts))
+    expectLines(printed2,
+      s"line-dedup: $lines duplicate lines cut from $lineTouched of $lineDocs docs",
+      s"span-dedup: $toks duplicate tokens cut from $spanTouched of $spanDocs docs",
+      s"curated corpus size: $curatedCuts")
+    cached.foreach(_.unpersist())
+
+    // run 3: the selection stages, with the export shuffle behind them
+    // (its range partitioner samples its input in a job of its own)
+    val benchDir = base.resolve("fbench").toString
+    docs.filter(col("doc_id").between(40L, 48L)).select("doc_id", "text")
+      .write.parquet(benchDir)
+    val lmPath = base.resolve("fppl.lm").toString
+    graft.llm.LangModel.save(graft.llm.LangModel.trainUnigram(
+      docs.filter(col("doc_id") < 200), "text", minCount = 2), lmPath)
+    val (out3, printed3, rows3) = run("select", in1,
+      s"""  quality-quantile = 0.6
+         |  benchmark-dir = "$benchDir"
+         |  lm-path = "$lmPath"
+         |  ppl-bucket-keep = [head, middle]
+         |  shuffle-salt = funnel""".stripMargin)
+    val curated3 = step(Curation.curate(src1, "doc_id", "text", cc))
+    val quantiled = step(Curation.keepTopQuantile(curated3, "lang_id", "quality", 0.6))
+    val n3 = Map("curate" -> curated3.count(), "quality-quantile" -> quantiled.count(),
+      "decontaminate" -> TextAnalysis.decontaminate(quantiled,
+        spark.read.parquet(benchDir), "doc_id", "text", "text").count(),
+      "ppl-buckets" -> spark.read.parquet(out3).count())
+    assert(n3("decontaminate") < n3("quality-quantile") &&
+      n3("ppl-buckets") < n3("decontaminate"), s"planted drops: $n3")
+    assert(rows3 == Seq("curate", "quality-quantile", "decontaminate", "ppl-buckets")
+      .map(k => k -> n3(k)))
+    expectLines(printed3,
+      s"curated corpus size: ${n3("curate")}",
+      s"quality-quantile: ${n3("quality-quantile")} of ${n3("curate")} survive",
+      s"decontamination: ${n3("decontaminate")} of ${n3("quality-quantile")} survive",
+      s"ppl buckets: ${n3("ppl-buckets")} docs kept")
+    cached.foreach(_.unpersist())
+
+    // run 4: a seed batch with embeddings (vector tiers on their first
+    // run — no corpus state yet, only the in-batch tier can drop: 21
+    // carries 20's embedding, scaled)
+    def withVecs(rows: Seq[(Long, String, Long)], scaled: Set[Long] = Set.empty): DataFrame =
+      rows.toDF("doc_id", "text", "vec_id").join(vecs, "vec_id").drop("vec_id")
+        .withColumn("embedding", when(col("doc_id").isin(scaled.toSeq: _*),
+          transform(col("embedding"), x => (x * lit(1.001f)).cast("float")))
+          .otherwise(col("embedding")))
+    val seedIn = base.resolve("fseed").toString
+    withVecs((100L until 130L).map(i => (i, texts(i), if (i == 121) 120L else i)),
+      scaled = Set(121L)).write.parquet(seedIn)
+    val state = base.resolve("fstate").toString
+    val vecStages = "  embedding-column = embedding"
+    val (outSeed, printed4, rows4) = run("seed", seedIn,
+      vecStages + s"""\n  state-out-dir = "$state"""")
+    val seed = spark.read.parquet(seedIn)
+    def vectorTiers(in: DataFrame, corpus: DataFrame, hot: Option[DataFrame],
+        inBatch: Boolean) =
+      step(Similarity.dropSeenVectors(in, corpus, 0.99, "doc_id", "embedding", 4,
+        cc.simHashMaxBucket, hot, 4233L, inBatchNear = inBatch))
+    val noVecState = Similarity.srpSignatures(seed.limit(0), "doc_id", "embedding", 4233L)
+    val n4 = Map("src" -> seed.count(),
+      "vector-fresh" -> vectorTiers(seed, noVecState, None, inBatch = false).count(),
+      "vector-tiers" -> vectorTiers(seed, noVecState, None, inBatch = true).count(),
+      "curate" -> spark.read.parquet(outSeed).count())
+    assert(n4("vector-fresh") == 30 && n4("vector-tiers") == 29, s"planted drops: $n4")
+    assert(rows4 == Seq("vector-tiers", "curate").map(k => k -> n4(k)))
+    expectLines(printed4,
+      s"vector tiers: batch=${n4("src")} rows, corpus tier dropped 0 ",
+      s"in-batch tier dropped 1 (cosine-verified), ${n4("vector-tiers")} rows continue",
+      s"curated corpus size: ${n4("curate")}")
+
+    // run 5 against the seed's state: exact copies and case-changed
+    // copies of curated docs (text tiers), fresh texts carrying curated
+    // docs' embeddings (vector corpus tier), an in-batch vector pair
+    val kept = spark.read.parquet(outSeed).select("doc_id", "text")
+      .orderBy("doc_id").as[(Long, String)].collect()
+    val batch2 = withVecs((
+      kept.take(3).zipWithIndex.map { case ((i, t), k) => (i + 1000, t, 300L + k) } ++
+      kept.slice(3, 6).zipWithIndex.map { case ((i, t), k) => (i + 2000, t.toUpperCase, 303L + k) } ++
+      kept.slice(6, 9).map { case (i, _) => (i + 3000, texts(i + 300), i) } ++
+      (309L until 320L).map(i => (i, texts(i), i)) :+ ((4319L, texts(199L), 319L))).toSeq,
+      scaled = Set(4319L))
+    val in5 = base.resolve("fin5").toString
+    batch2.write.parquet(in5)
+    val (out5, printed5, rows5) = run("incremental", in5,
+      vecStages + s"""\n  state-dir = "$state"""")
+    val src5 = spark.read.parquet(in5)
+    val hashes = Cli.readStateTable(spark, state, "hashes")
+    val textKept = step(Dedup.dropSeen(src5, "text", "doc_id", hashes,
+      Cli.readStateTable(spark, state, "sigs"), maxHamming = cc.simHashMaxHamming,
+      bands = cc.simHashBands, gramSize = cc.shingleSize, maxBucketSize = cc.simHashMaxBucket,
+      corpusHotBuckets = Some(spark.read.parquet(s"$state/hot")), inBatchNear = false))
+    val vecState = Cli.readStateTable(spark, state, "vecsigs")
+    val vecHot = Some(spark.read.parquet(s"$state/vechot"))
+    val n5 = Map("src" -> src5.count(),
+      "exact" -> Dedup.dropSeenExact(src5, "text", "doc_id", hashes).count(),
+      "incremental-text-tiers" -> textKept.count(),
+      "vector-fresh" -> vectorTiers(textKept, vecState, vecHot, inBatch = false).count(),
+      "vector-tiers" -> vectorTiers(textKept, vecState, vecHot, inBatch = true).count(),
+      "curate" -> spark.read.parquet(out5).count())
+    cached.foreach(_.unpersist())
+    assert(n5("src") == 21 && n5("exact") == 18 && n5("incremental-text-tiers") == 15 &&
+      n5("vector-fresh") == 12 && n5("vector-tiers") == 11, s"planted drops: $n5")
+    assert(rows5 == Seq("incremental-text-tiers", "vector-tiers", "curate").map(k => k -> n5(k)))
+    val t = n5("incremental-text-tiers")
+    expectLines(printed5,
+      s"incremental tiers: batch=${n5("src")} rows, exact tier dropped " +
+        s"${n5("src") - n5("exact")} (seen in corpus or in-batch exact dup), " +
+        s"corpus-near tier dropped ${n5("exact") - t} (signature-only, unverified), " +
+        s"$t rows continue to curation",
+      s"vector tiers: batch=$t rows, corpus tier dropped ${t - n5("vector-fresh")} ",
+      s"in-batch tier dropped ${n5("vector-fresh") - n5("vector-tiers")} (cosine-verified), " +
+        s"${n5("vector-tiers")} rows continue to curation",
+      s"curated corpus size: ${n5("curate")}")
+    // counting leaves the session serializable: MLlib training
+    // summaries capture it in task closures
+    new java.io.ObjectOutputStream(new java.io.ByteArrayOutputStream()).writeObject(spark)
+  }
 }
 
 /** Child-JVM probe for CliSpec: builds a CLI session from each HOCON

@@ -1034,6 +1034,29 @@ class CliSpecB extends CliSpecBase {
     assert(rows(3L) == "plain prose document with no markup at all")
   }
 
+  test("curator strip-markdown + normalize-text: normalization runs on the " +
+      "markdown-stripped text, not on the text before the strip") {
+    import spark.implicits._
+    val base = tmp()
+    val src = base.resolve("mdnsrc").toString
+    Seq((1L, "# Heading\nsome **bold** words in a short markdown note"))
+      .toDF("doc_id", "text").write.parquet(src)
+    val out = base.resolve("mdnout").toString
+    val f = write(base.resolve("curator_mdn.conf"),
+      s"""source { storage-type = local, dataset-dir = $src }
+         |target { storage-type = local, dataset-dir = $out, dataset-store-format = parquet, write-mode = overwrite }
+         |curation {
+         |  min-quality = 0.0
+         |  strip-markdown = true
+         |  normalize-text = true
+         |}
+         |""".stripMargin)
+    graft.cli.Curator.main(Array("--conf", f))
+    val text = spark.read.parquet(out).select("text").as[String].collect().toSeq
+    assert(text == Seq("Heading\nsome bold words in a short markdown note"),
+      s"markdown must stay stripped through normalization: $text")
+  }
+
   test("curator web-ingest chain: strip-html + normalize-text + c4 + gopher " +
       "+ budget compose in one config, each stage catching its own class") {
     import org.apache.spark.sql.functions.{col, sum}

@@ -478,14 +478,18 @@ class DedupSpec extends SparkTestBase {
       gramSize = 3, corpusHotBuckets = Some(hot))
       .select("doc_id").collect().map(_.getLong(0)).toSet
     assert(withState == out)
-    // counted variant: same survivors + per-tier attribution. Of 5 batch
-    // rows: exact tier drops 10 (seen) and 13 (in-batch exact) → 3;
-    // near tiers drop 11 (corpus-near) and 14 (in-batch near) → 1.
-    val (survivors, n) = Dedup.dropSeenCounted(batch, "text", "doc_id", seen, sigs, gramSize = 3)
-    assert(survivors.select("doc_id").collect().map(_.getLong(0)).toSet == out)
+    // per-tier attribution from observations of the one pass. Of 5
+    // batch rows: exact tier drops 10 (seen) and 13 (in-batch exact) →
+    // 3; near tiers drop 11 (corpus-near) and 14 (in-batch near) → 1.
+    val counts = new graft.cli.Cli.StageLog
+    val nBatch, nExact, nOut = counts.counter()
+    val survivors = Dedup.dropSeen(nBatch.observe(batch), "text", "doc_id", seen, sigs,
+      gramSize = 3, observeTier = nExact.observe)
+    assert(nOut.observe(survivors).select("doc_id").collect().map(_.getLong(0)).toSet == out)
     survivors.unpersist()
-    assert(n == Dedup.DropSeenCounts(batchRows = 5, afterExactTier = 3, survivors = 1), s"counts: $n")
-    assert(n.droppedExactTier == 2 && n.droppedNearTier == 2)
+    counts.resolve()
+    val n = Seq(nBatch, nExact, nOut).map(_.rows)
+    assert(n == Seq(5L, 3L, 1L), s"batch, after exact tier, survivors: $n")
   }
 
   test("connectedComponents labels transitive clusters with the min id") {

@@ -319,6 +319,18 @@ class SimilaritySpec extends SparkTestBase {
     val noTier = Similarity.dropSeenVectors(batch, state, minCosine = 0.99,
       inBatchNear = false).select("vec_id").collect().map(_.getLong(0)).toSet
     assert(noTier.contains(7000L) && noTier.contains(7001L))
+    // per-tier attribution from observations of the one pass: of 32
+    // batch rows the corpus tier drops the 10 echoes → 22, the in-batch
+    // tier drops 7001 → 21 survivors
+    val counts = new graft.cli.Cli.StageLog
+    val nBatch, nFresh, nOut = counts.counter()
+    val observed = Similarity.dropSeenVectors(nBatch.observe(batch), state,
+      minCosine = 0.99, observeTier = nFresh.observe)
+    assert(nOut.observe(observed).select("vec_id").collect().map(_.getLong(0)).toSet == surv)
+    observed.unpersist()
+    counts.resolve()
+    val n = Seq(nBatch, nFresh, nOut).map(_.rows)
+    assert(n == Seq(32L, 22L, 21L), s"batch, after corpus tier, survivors: $n")
     batch.unpersist(); state.unpersist()
   }
 
