@@ -1,6 +1,9 @@
 package graft
 
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart, SparkListenerTaskEnd}
 import org.apache.spark.sql.{DataFrame, SparkSession}
+
+import scala.collection.mutable
 
 /** Benchmark main. Prints ONE JSON line `{"metric":"total","value":…,
   * "unit":"sec","queries":{…},"sf":…}` for the driver's BENCH_r{N}.json.
@@ -32,10 +35,124 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *    artifact shows gc_ms rivalling the query time. (Until r9,
   *    heap_after skipped the collect and read garbage, not residency —
   *    the "4.9 GB dedup band" was 90 MB retained.)
+  *
+  * LAYERS: a [[LayerListener]] attributes every job to the timed pass
+  * that submitted it, and the JSON carries each query's `layers` from the
+  * pass its reported time comes from (the median, or a retime that
+  * replaced it): jobs, stages, tasks, executor time, the driver gap,
+  * shuffle, spill and task skew.
   */
 object Bench {
   private def materialize(df: DataFrame): Unit =
     df.write.format("noop").mode("overwrite").save()
+
+  private def r3(v: Double): String = "%.3f".formatLocal(java.util.Locale.ROOT, v)
+
+  /** The local property that tags a timed pass, `<query>#<pass>`. */
+  private[graft] val PassKey = "graft.bench.pass"
+
+  /** One pass's layer figures, defined as perfbench's `Trace` defines
+    * them, so each name means the same in both harnesses:
+    *  - `stages` counts the stages that ran at least one task;
+    *  - `driver_gap_s` is the pass's wall time minus the union of its
+    *    jobs' intervals;
+    *  - `spill_mb` is memory plus disk spill;
+    *  - `task_skew` is the largest max/median task time over the stages
+    *    with at least 2 tasks (1 when there is none, 0 with no job). */
+  private[graft] final case class Layers(jobs: Int, stages: Int, tasks: Long,
+      execRunS: Double, execCpuS: Double, driverGapS: Double,
+      shuffleReadMb: Double, shuffleWriteMb: Double, spillMb: Double,
+      taskSkew: Double) {
+    def json: String =
+      s"""{"jobs":$jobs,"stages":$stages,"tasks":$tasks,"exec_run_s":${r3(execRunS)},""" +
+        s""""exec_cpu_s":${r3(execCpuS)},"driver_gap_s":${r3(driverGapS)},""" +
+        s""""shuffle_read_mb":${r3(shuffleReadMb)},"shuffle_write_mb":${r3(shuffleWriteMb)},""" +
+        s""""spill_mb":${r3(spillMb)},"task_skew":${r3(taskSkew)}}"""
+  }
+
+  /** Attributes jobs and their tasks to the pass named by the job's
+    * [[PassKey]]. Spark copies local properties onto every job a thread
+    * submits, also from the SQL engine's own threads (broadcast
+    * exchanges, subqueries), so attribution does not depend on timing.
+    * Untagged jobs (warm-up, hygiene) are not recorded. Events arrive on
+    * the listener bus: read [[layers]] after `SparkContext.stop()`, which
+    * drains it. */
+  private[graft] final class LayerListener extends SparkListener {
+    private final class Job(val pass: String, val start: Long) { var end: Long = start }
+    private final class Stage(val pass: String) {
+      val taskMs = mutable.ArrayBuffer.empty[Long]
+      var runMs, cpuNs, readBytes, writeBytes, spillBytes = 0L
+    }
+    private val jobs = mutable.HashMap.empty[Int, Job]
+    private val stages = mutable.HashMap.empty[Int, Stage]
+
+    def jobStarted(jobId: Int, pass: String, stageIds: Seq[Int], time: Long): Unit =
+      synchronized {
+        if (pass != null) {
+          jobs(jobId) = new Job(pass, time)
+          stageIds.foreach(stages.getOrElseUpdate(_, new Stage(pass)))
+        }
+      }
+
+    def jobEnded(jobId: Int, time: Long): Unit =
+      synchronized(jobs.get(jobId).foreach(_.end = time))
+
+    def taskEnded(stageId: Int, durationMs: Long, runMs: Long, cpuNs: Long,
+        readBytes: Long, writeBytes: Long, spillBytes: Long): Unit =
+      synchronized(stages.get(stageId).foreach { s =>
+        s.taskMs += durationMs
+        s.runMs += runMs; s.cpuNs += cpuNs
+        s.readBytes += readBytes; s.writeBytes += writeBytes; s.spillBytes += spillBytes
+      })
+
+    override def onJobStart(e: SparkListenerJobStart): Unit = jobStarted(e.jobId,
+      Option(e.properties).map(_.getProperty(PassKey)).orNull, e.stageIds, e.time)
+
+    override def onJobEnd(e: SparkListenerJobEnd): Unit = jobEnded(e.jobId, e.time)
+
+    override def onTaskEnd(e: SparkListenerTaskEnd): Unit = Option(e.taskMetrics) match {
+      case Some(m) => taskEnded(e.stageId, e.taskInfo.duration, m.executorRunTime,
+        m.executorCpuTime, m.shuffleReadMetrics.totalBytesRead,
+        m.shuffleWriteMetrics.bytesWritten, m.memoryBytesSpilled + m.diskBytesSpilled)
+      case None => taskEnded(e.stageId, e.taskInfo.duration, 0L, 0L, 0L, 0L, 0L)
+    }
+
+    /** The figures of `pass`, whose wall time was `wallS`. */
+    def layers(pass: String, wallS: Double): Layers = synchronized {
+      val js = jobs.values.filter(_.pass == pass).toSeq
+      val ss = stages.values.filter(s => s.pass == pass && s.taskMs.nonEmpty).toSeq
+      val skews = ss.filter(_.taskMs.size >= 2).map { s =>
+        val med = median(s.taskMs.toSeq)
+        if (med > 0) s.taskMs.max / med else 1.0
+      }
+      val mb = 1048576.0
+      Layers(js.size, ss.size, ss.map(_.taskMs.size.toLong).sum,
+        ss.map(_.runMs).sum / 1e3, ss.map(_.cpuNs).sum / 1e9,
+        math.max(0.0, wallS - unionMs(js.map(j => (j.start, j.end))) / 1e3),
+        ss.map(_.readBytes).sum / mb, ss.map(_.writeBytes).sum / mb,
+        ss.map(_.spillBytes).sum / mb,
+        if (skews.nonEmpty) skews.max else if (js.nonEmpty) 1.0 else 0.0)
+    }
+  }
+
+  private def median(xs: Seq[Long]): Double = {
+    val s = xs.sorted
+    if (s.size % 2 == 1) s(s.size / 2).toDouble else (s(s.size / 2 - 1) + s(s.size / 2)) / 2.0
+  }
+
+  /** Total length of the union of `[start, end]` intervals, in ms. */
+  private def unionMs(intervals: Seq[(Long, Long)]): Long = {
+    var covered = 0L
+    var curS, curE = Long.MinValue
+    intervals.sortBy(_._1).foreach { case (s, e) =>
+      if (s > curE) {
+        if (curE > curS) covered += curE - curS
+        curS = s; curE = e
+      } else if (e > curE) curE = e
+    }
+    if (curE > curS) covered += curE - curS
+    covered
+  }
 
   /** Host load (1/5/15-min from /proc/loadavg) — stamped into the
     * artifact at start and end so a `suspect_env` round is diagnosable
@@ -73,6 +190,8 @@ object Bench {
     if (!dumpsTimed) System.setProperty("graft.aux.skip", "1")
     val loadStart = loadAvg
     val spark = graft.tools.Local.session(cpus)
+    val layerListener = new LayerListener
+    spark.sparkContext.addSparkListener(layerListener)
 
     // Warmup: one untimed pass per distinct machinery shape (agg, join,
     // udaf top-k, streaming microbatch) so one-time JVM/codegen/stream
@@ -136,20 +255,29 @@ object Bench {
     // name -> (median, retime): queries whose median blew past 2× their
     // prev-round entry and were re-timed once after a fresh GC barrier
     val retimes = scala.collection.mutable.LinkedHashMap.empty[String, (Double, Double)]
-    def timedPass(name: String, fn: (SparkSession, String) => DataFrame): Double = {
+    // pass tag -> its wall seconds, failed passes too (up to the failure)
+    val passWall = scala.collection.mutable.HashMap.empty[String, Double]
+    // query -> the pass its reported time (and layers) come from
+    val layerPass = scala.collection.mutable.LinkedHashMap.empty[String, String]
+    def timedPass(name: String, pass: String,
+        fn: (SparkSession, String) => DataFrame): Double = {
+      val tag = s"$name#$pass"
+      spark.sparkContext.setLocalProperty(PassKey, tag)
       val t0 = System.nanoTime()
+      def wall = { val s = (System.nanoTime() - t0) / 1e9; passWall(tag) = s; s }
       try {
         val df = fn(spark, sfDir)
         materialize(df)
         // queries returning persisted frames (q22 curation) must not
         // leave their cache resident across later timed queries
         df.unpersist()
-        (System.nanoTime() - t0) / 1e9
+        wall
       } catch {
         case e: Throwable =>
+          wall
           System.err.println(s"[bench] $name FAILED: ${e.getMessage}")
           -1.0
-      }
+      } finally spark.sparkContext.setLocalProperty(PassKey, null)
     }
     val results = SparkEntry.queries.toSeq.sortBy(_._1)
       .filter { case (name, _) => only.forall(_.contains(name)) }
@@ -168,7 +296,7 @@ object Bench {
       // every pass pays the full computation from the parquet inputs.
       val times = (1 to runs).map { i =>
         if (i > 1) { spark.catalog.clearCache(); System.gc() }
-        timedPass(name, fn)
+        timedPass(name, i.toString, fn)
       }
       // gc_ms must NOT include the retained-heap measurement collection
       // below (round-10 advice): snapshot the delta before the explicit
@@ -186,9 +314,14 @@ object Bench {
       val rawAfter = heapUsedMb
       System.gc()
       mem(name) = (heapBefore, heapUsedMb, gcDelta, rawAfter)
-      if (times.exists(_ < 0)) { failed ::= name; name -> -1.0 }
-      else {
-        var median = times.sorted.apply(runs / 2)
+      if (times.exists(_ < 0)) {
+        failed ::= name
+        layerPass(name) = s"$name#${times.indexWhere(_ < 0) + 1}"
+        name -> -1.0
+      } else {
+        val (m, mi) = times.zipWithIndex.sortBy(_._1).apply(runs / 2)
+        var median = m
+        layerPass(name) = s"$name#${mi + 1}"
         // environment-anomaly retime (round-10 verdict: the driver's
         // q62 read 7.25 s under box contention vs a true 1.6 s — the
         // 3rd q36-class incident to reach a judge artifact). If the
@@ -201,7 +334,7 @@ object Bench {
           if (prev > 0 && median > 2 * prev && median - prev > 0.25) {
             spark.catalog.clearCache()
             System.gc()
-            val again = timedPass(name, fn)
+            val again = timedPass(name, "retime", fn)
             if (again >= 0) {
               retimes(name) = (median, again)
               System.err.println(
@@ -209,7 +342,10 @@ object Bench {
               // the official number stays the better-supported reading:
               // a retime inside the normal band overrides a contended
               // median (2 clean obs vs 3 contended-window obs)
-              if (again <= 1.5 * prev) median = again
+              if (again <= 1.5 * prev) {
+                median = again
+                layerPass(name) = s"$name#retime"
+              }
             }
           }
         }
@@ -290,7 +426,28 @@ object Bench {
     if (suspects.nonEmpty)
       System.err.println(s"[bench] REGRESSION SUSPECT (retime confirmed >=2x " +
         f"prev at load scale $loadScale%.2f): ${suspects.mkString(", ")}")
-    val json = s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"sf":"$sfDir","runs":$runs,"failed":${failed.size},"baseline_set_total":$baseTotal,"n_queries":${results.size},"dumps_timed":$dumpsTimed,"cpus":$cpus,"load_scale":$loadScale,"regression_suspect":$suspectsJson,$normJson,"retimes":$retimesJson,"mem":$memJson}"""
+    // Stopping the context drains its listener bus: only then does the
+    // layer listener hold every pass's jobs and tasks. The compact line
+    // stays the final stdout bytes, so shutdown chatter (StateStore
+    // maintenance stack traces, the round-7..9 killer) lands before it,
+    // with the noisy shutdown loggers quieted for good measure.
+    org.apache.logging.log4j.core.config.Configurator.setLevel(
+      "org.apache.spark.sql.execution.streaming.state",
+      org.apache.logging.log4j.Level.OFF)
+    try spark.stop()
+    catch { case e: Throwable => System.err.println(s"[bench] spark.stop: ${e.getMessage}") }
+    val layersJson = layerPass.map { case (q, tag) =>
+      s"\"$q\":" + layerListener.layers(tag, passWall.getOrElse(tag, 0.0)).json
+    }.mkString("{", ",", "}")
+    // The compact line also repeats every query the last recorded round
+    // printed, and every query the prev run printed, so a round-over-round
+    // intersection always covers them: a query that got faster and fell
+    // out of the top 5 must not read as "dropped_from_bench" (r15's
+    // q114/q117, r16's q132).
+    val headline = compactQueries(results, baselineSet,
+      lastPrinted(new java.io.File(".")) ++ prevJson.toSeq.flatMap(parseNames(_, "printed")))
+    val printedJson = headline.map("\"" + _._1 + "\"").mkString("[", ",", "]")
+    val json = s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"sf":"$sfDir","runs":$runs,"failed":${failed.size},"baseline_set_total":$baseTotal,"n_queries":${results.size},"dumps_timed":$dumpsTimed,"cpus":$cpus,"load_scale":$loadScale,"regression_suspect":$suspectsJson,$normJson,"retimes":$retimesJson,"printed":$printedJson,"mem":$memJson,"layers":$layersJson}"""
     // The FULL artifact (per-query timings + mem) goes to a file and an
     // early stdout line. It cannot be the driver's parse target: at 120+
     // queries the line is ~12 KB, and the driver keeps only the last
@@ -311,43 +468,45 @@ object Bench {
     // stays owned by `failed`.
     if (prevComparable) printRegressions(json)
     // The driver's parse target: a COMPACT line (<1 KB — headline totals,
-    // the 10 baseline-set queries, the 5 slowest) that fits whole inside
-    // the 2,000-byte tail, emitted as the FINAL stdout bytes AFTER
-    // spark.stop() so post-JSON shutdown chatter (StateStore maintenance
-    // stack traces, the round-7..9 killer) lands before it, with the
-    // noisy shutdown loggers quieted for good measure.
-    def r3(v: Double): String = "%.3f".formatLocal(java.util.Locale.ROOT, v)
-    // the queries the PREVIOUS round's compact line printed (recomputed
-    // from bench_prev's full per-query map: its printed set is by
-    // construction the baseline set plus its 5 slowest others). Echoed
-    // into THIS compact line so the driver's round-over-round
-    // intersection always covers them — round 15's q114/q117 got FASTER,
-    // fell out of the printed top-5, and were mislabeled
-    // "dropped_from_bench" (r15 verdict item 3). Additions-only: ≤5
-    // extra entries, the line stays well inside the 2 KB tail window.
-    val prevPrinted = prevTimes.toSeq
-      .filter { case (k, _) => !baselineSet(k) }
-      .sortBy(-_._2).take(5).map(_._1)
-    val headline = (baselineSet.toSeq.sorted.flatMap(q => results.find(_._1 == q)) ++
-      results.filter { case (k, v) => v >= 0 && !baselineSet(k) }
-        .sortBy(-_._2).take(5) ++
-      prevPrinted.flatMap(q => results.find { case (k, v) => k == q && v >= 0 })).distinct
+    // the baseline-set queries, the 5 slowest, the repeated ones above)
+    // that fits whole inside the 2,000-byte tail.
     val failedJson = failed.map("\"" + _ + "\"").mkString("[", ",", "]")
     val compactRetimes = retimes.map { case (k, (med, re)) =>
       val suspect = prevTimes.get(k).exists(p => re <= 1.5 * p)
       s"\"" + k + s"\":{\"median\":${r3(med)},\"retime\":${r3(re)},\"suspect_env\":$suspect}"
     }.mkString("{", ",", "}")
     val compact = s"""{"metric":"total","value":${r3(total)},"unit":"sec","sf":"$sfDir","runs":$runs,"failed":${failed.size},"failed_queries":$failedJson,"baseline_set_total":${r3(baseTotal)},"n_queries":${results.size},"dumps_timed":$dumpsTimed,"regression_suspect":$suspectsJson,"norm_ratio":${r3(normRatio)},"prev_norm_ratio":${r3(prevNormRatio.getOrElse(-1.0))},"norm_vs_prev":${r3(normVsPrev)},"loadavg_start":"$loadStart","loadavg_end":"$loadEnd","retimes":$compactRetimes,"queries":${headline.map { case (k, v) => s"\"" + k + "\":" + r3(v) }.mkString("{", ",", "}")},"queries_truncated":true,"full_queries":"target/bench.json"}"""
-    org.apache.logging.log4j.core.config.Configurator.setLevel(
-      "org.apache.spark.sql.execution.streaming.state",
-      org.apache.logging.log4j.Level.OFF)
-    try spark.stop()
-    catch { case e: Throwable => System.err.println(s"[bench] spark.stop: ${e.getMessage}") }
     // brief grace for detached shutdown threads to finish writing stderr
     Thread.sleep(2000)
     println(compact)
     System.out.flush()
     if (failed.nonEmpty) sys.exit(1)
+  }
+
+  /** The compact line's queries: the baseline set, the 5 slowest others,
+    * and each query of `repeat` that ran, each once. */
+  private[graft] def compactQueries(results: Seq[(String, Double)],
+      baselineSet: Set[String], repeat: Set[String]): Seq[(String, Double)] =
+    (baselineSet.toSeq.sorted.flatMap(q => results.find(_._1 == q)) ++
+      results.filter { case (k, v) => v >= 0 && !baselineSet(k) }.sortBy(-_._2).take(5) ++
+      results.filter { case (k, v) => v >= 0 && repeat(k) }).distinct
+
+  /** The queries the last recorded round printed: the union of the
+    * `parsed.queries` keys of the highest-numbered `BENCH_r<N>*.json`
+    * files in `dir` (a round may record several, `BENCH_r16.json` and
+    * `BENCH_r16_c8.json`); empty when there is none. An unreadable file
+    * adds nothing. */
+  private[graft] def lastPrinted(dir: java.io.File): Set[String] = {
+    import scala.jdk.CollectionConverters._
+    val Round = """BENCH_r(\d+)(?:_[^.]*)?\.json""".r
+    val rounds = Option(dir.listFiles).toSeq.flatten.flatMap { f =>
+      f.getName match { case Round(n) => Some(n.toInt -> f); case _ => None }
+    }
+    val mapper = new com.fasterxml.jackson.databind.ObjectMapper
+    rounds.filter(_._1 == rounds.map(_._1).maxOption.getOrElse(0)).flatMap { case (_, f) =>
+      scala.util.Try(mapper.readTree(f).path("parsed").path("queries")
+        .fieldNames.asScala.toSeq).getOrElse(Nil)
+    }.toSet
   }
 
   /** Diff this run against `bench_prev.json` (the prior round's committed
@@ -468,6 +627,19 @@ object Bench {
       val end = rest.indexWhere(c => c == ',' || c == '}')
       try Some(rest.substring(0, if (end < 0) rest.length else end).trim.toDouble)
       catch { case _: NumberFormatException => None }
+    }
+  }
+
+  /** Minimal extractor for a top-level array of names
+    * (`"field":["a","b"]`); absent → empty. */
+  private[graft] def parseNames(json: String, field: String): Seq[String] = {
+    val key = "\"" + field + "\":["
+    val i = json.indexOf(key)
+    if (i < 0) Nil
+    else {
+      val body = json.substring(i + key.length)
+      body.substring(0, math.max(0, body.indexOf(']'))).split(",").toSeq
+        .map(_.trim.stripPrefix("\"").stripSuffix("\"")).filter(_.nonEmpty)
     }
   }
 

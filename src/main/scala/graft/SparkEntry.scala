@@ -34,8 +34,7 @@ object SparkEntry {
     * pass) never collide on an active query name. */
   private val StreamRunSeq = new java.util.concurrent.atomic.AtomicInteger(0)
 
-  /** q38's planted chain corpus (shared with PerfProbe so the probe
-    * always times the exact gate workload): for each base doc, C = base
+  /** q38's planted chain corpus: for each base doc, C = base
     * + 2k sentinel tokens (id+10000) and hub B = base + k sentinels
     * (id+20000) — B sits between base and C in Jaccard, so base ~ B ~ C
     * chains without base ~ C. Variant texts derive BEFORE the id shift

@@ -3341,7 +3341,12 @@ object Streamer {
               "the new checkpoint")
         }
         val countParts = clusterPartsBefore(fs, root, "hotcounts", idx, includeZero = true)
-        val batch = batchRaw.persist()
+        // the log line's counts ride the passes below, read after the
+        // writes; each counter sits inside its frame's cache, so the
+        // action that fills the cache fixes its value
+        val counts = new Cli.StageLog
+        val nBatch, nKept = counts.counter()
+        val batch = nBatch.observe(batchRaw).persist()
         // ONE decode pass: the codegen'd hash column, cached — every
         // join below is signature-level
         val batchSigs = batch.select(col(idCol).as("id"),
@@ -3398,7 +3403,7 @@ object Streamer {
           // state-part anti-join below
           val dropIds = seen.unionByName(inBatchDrop)
             .withColumnRenamed("id", idCol).persist()
-          val survivors = batch.join(dropIds, Seq(idCol), "left_anti").persist()
+          val survivors = nKept.observe(batch.join(dropIds, Seq(idCol), "left_anti")).persist()
           try {
             survivors.write.mode("overwrite").parquet(s"$targetDir/batch-$batchId")
             batchSigs.join(dropIds.withColumnRenamed(idCol, "id"), Seq("id"), "left_anti")
@@ -3412,12 +3417,13 @@ object Streamer {
                 spark.read.parquet((countParts :+ s"$root/hotcounts/part-$idx"): _*)),
               maxBucket)
               .write.mode("overwrite").parquet(s"$root/hot")
-            val rows = batch.count()
-            val kept = survivors.count()
-            Cli.log(s"media-near-dedup-cluster batch $batchId ($hashModality): " +
-              s"$rows assets, dropped ${rows - kept} " +
-              s"(vs-corpus + in-batch keep-lower-id), " +
-              s"$kept survivors -> $targetDir/batch-$batchId")
+            counts.report {
+              Cli.log(s"media-near-dedup-cluster batch $batchId ($hashModality): " +
+                s"${nBatch.rows} assets, dropped ${nBatch.rows - nKept.rows} " +
+                s"(vs-corpus + in-batch keep-lower-id), " +
+                s"${nKept.rows} survivors -> $targetDir/batch-$batchId")
+            }
+            counts.resolve()
           } finally {
             survivors.unpersist(); dropIds.unpersist(); seen.unpersist(); ()
           }

@@ -123,4 +123,92 @@ class BenchSpec extends AnyFunSuite {
       Map("q2" -> 1.5))
     assert(Bench.parseQueryTimes("""{"no_queries_here":1}""").isEmpty)
   }
+
+  test("layers: two overlapping jobs' intervals count once in driver_gap_s") {
+    val l = new Bench.LayerListener
+    l.jobStarted(1, "q#1", Seq(1), 1000L); l.jobEnded(1, 3000L)
+    l.jobStarted(2, "q#1", Seq(2), 2000L); l.jobEnded(2, 4000L)
+    l.taskEnded(1, 500L, 400L, 300000000L, 0L, 2097152L, 0L)
+    l.taskEnded(2, 500L, 400L, 300000000L, 1048576L, 0L, 524288L)
+    val f = l.layers("q#1", 5.0)
+    // 5 s of wall, the jobs cover [1 s, 4 s]: 2 s of gap, not 1 s
+    assert(f.driverGapS == 2.0)
+    assert((f.jobs, f.stages, f.tasks) == (2, 2, 2L))
+    assert(f.execRunS == 0.8 && f.execCpuS == 0.6)
+    assert(f.shuffleReadMb == 1.0 && f.shuffleWriteMb == 2.0 && f.spillMb == 0.5)
+  }
+
+  test("layers: single-task stages are left out of task_skew") {
+    val l = new Bench.LayerListener
+    l.jobStarted(1, "q#2", Seq(1, 2), 0L); l.jobEnded(1, 10000L)
+    // a long single-task stage beside a 3-task stage skewed 3x
+    l.taskEnded(1, 5000L, 0L, 0L, 0L, 0L, 0L)
+    Seq(100L, 100L, 300L).foreach(ms => l.taskEnded(2, ms, 0L, 0L, 0L, 0L, 0L))
+    assert(l.layers("q#2", 10.0).taskSkew == 3.0)
+    // only single-task stages: no skew to measure
+    val one = new Bench.LayerListener
+    one.jobStarted(1, "q#1", Seq(1), 0L); one.jobEnded(1, 10L)
+    one.taskEnded(1, 5000L, 0L, 0L, 0L, 0L, 0L)
+    assert(one.layers("q#1", 1.0).taskSkew == 1.0)
+    assert(one.layers("other#1", 1.0).taskSkew == 0.0)
+  }
+
+  test("layers: untagged jobs are attributed to no query") {
+    val l = new Bench.LayerListener
+    l.jobStarted(1, "q#1", Seq(1), 0L); l.jobEnded(1, 1000L)
+    l.taskEnded(1, 100L, 100L, 0L, 0L, 0L, 0L)
+    // a warm-up or hygiene job: no pass tag, its own stage and tasks
+    l.jobStarted(2, null, Seq(2), 1000L); l.jobEnded(2, 3000L)
+    l.taskEnded(2, 2000L, 2000L, 0L, 0L, 0L, 0L)
+    val f = l.layers("q#1", 3.0)
+    assert((f.jobs, f.stages, f.tasks) == (1, 1, 1L))
+    assert(f.execRunS == 0.1 && f.driverGapS == 2.0)
+    assert(Bench.Layers(1, 1, 1L, 0.1, 0.0, 2.0, 0.0, 0.0, 0.0, 1.0).json ==
+      """{"jobs":1,"stages":1,"tasks":1,"exec_run_s":0.100,"exec_cpu_s":0.000,""" +
+      """"driver_gap_s":2.000,"shuffle_read_mb":0.000,"shuffle_write_mb":0.000,""" +
+      """"spill_mb":0.000,"task_skew":1.000}""")
+  }
+
+  test("compactQueries: a query the last recorded round printed is repeated " +
+      "even when it ranks outside the top 5 (r16's phantom q132 drop)") {
+    // BENCH_r15.json's printed `parsed.queries`
+    val r15 = Set("q10_minmax", "q128_curator_e2e", "q132_cluster_balanced_sample",
+      "q149_load_calibration", "q1_pricing_summary", "q2_filter_cast",
+      "q38_transitive_dedup", "q3_literal_meta", "q4_limit", "q5_sample",
+      "q6_join_agg", "q7_window_topn", "q8_stratified_sample",
+      "q91_bow_classifier", "q96_chargram_classifier", "q9_group_count")
+    val baseline = Set("q1_pricing_summary", "q149_load_calibration")
+    // q132 is the 10th slowest query
+    val others = (1 to 12).map(i => s"qx$i" -> (20.0 - i)) :+
+      ("q132_cluster_balanced_sample" -> 10.5)
+    val results = (Seq("q1_pricing_summary" -> 0.2, "q149_load_calibration" -> 1.0) ++
+      others).sortBy(_._1)
+    val printed = Bench.compactQueries(results, baseline, r15).map(_._1)
+    assert(printed.contains("q132_cluster_balanced_sample"))
+    assert(printed.take(2) == Seq("q149_load_calibration", "q1_pricing_summary"))
+    assert(printed.count(_.startsWith("qx")) == 5)
+    assert(printed.distinct == printed)
+    // nothing to repeat: the baseline set and the top 5 only
+    assert(Bench.compactQueries(results, baseline, Set.empty).size == 7)
+  }
+
+  test("lastPrinted: the union of the highest-numbered round's printed " +
+      "queries; none without a round file") {
+    val dir = java.nio.file.Files.createTempDirectory("bench-rounds").toFile
+    def round(name: String, queries: String*): Unit = java.nio.file.Files.writeString(
+      new java.io.File(dir, name).toPath,
+      s"""{\n  "n": 1,\n  "tail": "\\"queries\\":{\\"qTail\\":1}",\n  "parsed": {\n""" +
+        s"""    "queries": {${queries.map(q => s"\n      \"$q\": 1.0").mkString(",")}\n    }\n  }\n}\n""")
+    assert(Bench.lastPrinted(dir).isEmpty)
+    round("BENCH_r9.json", "qOld")
+    round("BENCH_r10.json", "qA", "qB")
+    round("BENCH_r10_c8.json", "qB", "qC")
+    java.nio.file.Files.writeString(new java.io.File(dir, "BENCH_r11.txt").toPath, "x")
+    assert(Bench.lastPrinted(dir) == Set("qA", "qB", "qC"))
+    // what a run printed is stamped into its artifact and read back
+    assert(Bench.parseNames("""{"printed":["q1","q132"],"mem":{}}""", "printed") ==
+      Seq("q1", "q132"))
+    assert(Bench.parseNames("""{"printed":[]}""", "printed").isEmpty)
+    assert(Bench.parseNames("""{"value":1.0}""", "printed").isEmpty)
+  }
 }

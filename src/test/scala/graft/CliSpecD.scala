@@ -1877,7 +1877,17 @@ class CliSpecD extends CliSpecBase {
          |  shuffle-partitions = 4
          |}
          |""".stripMargin)
-    graft.cli.Streamer.main(Array("--conf", conf))
+    // what the Streamer printed, checked against the batch's log line
+    def runLogs(batchId: Int, assets: Int, dropped: Int, kept: Int): Unit = {
+      val buf = new java.io.ByteArrayOutputStream()
+      try Console.withOut(new java.io.PrintStream(buf, true, "UTF-8")) {
+        graft.cli.Streamer.main(Array("--conf", conf))
+      } finally print(buf.toString("UTF-8"))
+      val line = s"media-near-dedup-cluster batch $batchId (image-dct): $assets assets, " +
+        s"dropped $dropped (vs-corpus + in-batch keep-lower-id), $kept survivors"
+      assert(buf.toString("UTF-8").contains(line), s"missing log line: $line")
+    }
+    runLogs(0, 11, 1, 10)
     val b0 = spark.read.parquet(s"$out/batch-0").select("asset_id")
       .as[Long].collect().toSet
     assert(b0 == (0L until 10L).toSet,
@@ -1885,7 +1895,7 @@ class CliSpecD extends CliSpecBase {
     // batch 2 (same checkpoint): fresh plates + a degraded echo of
     // plate 1 — near the ACCRETED state, drops vs-corpus
     land(Seq(10L -> png(10L), 11L -> png(11L), 100001L -> degraded(1L)))
-    graft.cli.Streamer.main(Array("--conf", conf))
+    runLogs(1, 3, 1, 2)
     val b1 = spark.read.parquet(s"$out/batch-1").select("asset_id")
       .as[Long].collect().toSet
     assert(b1 == Set(10L, 11L),
